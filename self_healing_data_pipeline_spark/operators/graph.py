@@ -1,13 +1,16 @@
 """Shared graph builders: the support-filtered part CO-OCCURRENCE
-graph over lineitem, used by triangle counting (`extras8`), k-hop
-reach (`extras9`), and association rules (`extras10`) — one Spark
-definition and ONE oracle CTE so the three consumers can never count
-different graphs.
+graph over lineitem, used by triangle counting, k-hop and recursive
+reach, PageRank, label propagation, neighbor Jaccard, basket
+pairs/rules and item CF — one Spark definition and ONE oracle CTE so
+the consumers can never count different graphs.
 
-Scale shape (shared by construction): the (order, part) grain
-self-joins WITHIN order only — pair volume is Σ|basket|², bounded by
-per-order line counts, never |parts|² — and the weight-filtered edge
-list collapses map-side before any consumer touches it."""
+Scale shape (shared by construction): each order's distinct parts are
+gathered into one sorted ``collect_set`` basket (a single shuffle keyed
+on the order, no join), and pairs are exploded WITHIN that basket only —
+pair volume is Σ|basket|², bounded by per-order line counts, never
+|parts|² — then the weight-filtered edge list collapses map-side before
+any consumer touches it. The DuckDB twin keeps the equivalent
+distinct-grain self-join (``CO_PAIR_CTE_SQL``)."""
 
 from __future__ import annotations
 

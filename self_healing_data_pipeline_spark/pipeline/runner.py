@@ -20,7 +20,11 @@ Re-expresses the reference's step state machine and failure handling
 
 Plus what a Spark pipeline needs that a browser app doesn't: retry with
 exponential backoff (transient executor/IO failures are the norm at
-1000-executor scale) and idempotent stage outputs.
+1000-executor scale) and idempotent stage outputs. Every exception is
+retried except a rejected input (``UnsupportedFormatError``, or
+``RejectedInputError`` for a file with no data rows): the same input fails
+the same way on every attempt, so that stage goes to ERROR after one
+attempt.
 """
 
 from __future__ import annotations
@@ -33,6 +37,8 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from self_healing_data_pipeline_spark.sources.readers import UnsupportedFormatError
 
 
 class PipelineStep(enum.Enum):
@@ -54,6 +60,16 @@ class EtlLogEntry:
     step: str
     message: str
     severity: str = "info"  # info | warning | error
+
+
+class RejectedInputError(ValueError):
+    """An input that no retry can make usable, such as a file with no data
+    rows. Like ``UnsupportedFormatError``, it fails its stage after one
+    attempt."""
+
+
+#: Deterministic input rejections: never retried.
+_REJECTED_INPUT = (RejectedInputError, UnsupportedFormatError)
 
 
 class StageError(RuntimeError):
@@ -110,6 +126,7 @@ class SelfHealingPipeline:
     Each stage: run → validate → on failure retry with backoff → on
     exhaustion transition to ERROR with the failure logged and the
     pipeline left reusable (clean-slate semantics of App.tsx:67-86).
+    A rejected input (``_REJECTED_INPUT``) skips the remaining retries.
     """
 
     def __init__(self, spark: SparkSession):
@@ -190,7 +207,12 @@ class SelfHealingPipeline:
                     f"{stage.name}: {exc}\n{traceback.format_exc(limit=3)}",
                     "error",
                 )
-        self.log(f"{stage.name}: exhausted retries ({last_exc})", "error")
+                if isinstance(exc, _REJECTED_INPUT):
+                    break  # every retry would fail the same way
+        reason = str(last_exc)
+        if isinstance(last_exc, _REJECTED_INPUT):
+            reason = f"input rejected: {reason}"
+        self.log(f"{stage.name}: exhausted retries ({reason})", "error")
         return value, False
 
 
@@ -241,7 +263,7 @@ def ingest_file_pipeline(
         t0 = time.time()
         df = read_any(spark, path)
         if df.isEmpty():
-            raise ValueError("The file contains no data rows.")
+            raise RejectedInputError("The file contains no data rows.")
         lineage.record("Upload", [path], f"{name}:raw", df, t0)
         return df
 

@@ -95,12 +95,26 @@ def test_ingest_records_lineage(spark, tmp_path):
     )
 
 
+def _assert_rejected_after_one_attempt(result):
+    assert not result.ok
+    assert result.step == PipelineStep.ERROR
+    errors = [l.message for l in result.logs if l.severity == "error"]
+    assert len(errors) == 2  # the one attempt, then the closing entry
+    assert errors[0].startswith("Upload: ")
+    assert errors[1].startswith("Upload: exhausted retries (input rejected: ")
+    assert not any(l.severity == "warning" for l in result.logs)  # no retry
+
+
 def test_ingest_empty_file_rejected(spark, tmp_path):
     p = tmp_path / "empty.csv"
     p.write_text("a,b,c\n")
-    result = ingest_file_pipeline(spark, str(p))
-    assert not result.ok
-    assert result.step == PipelineStep.ERROR
+    _assert_rejected_after_one_attempt(ingest_file_pipeline(spark, str(p)))
+
+
+def test_ingest_unsupported_format_rejected(spark, tmp_path):
+    p = tmp_path / "notes.txt"
+    p.write_text("a,b\n1,2\n")
+    _assert_rejected_after_one_attempt(ingest_file_pipeline(spark, str(p)))
 
 
 def test_review_gate_auto_approves_headless(spark, tmp_path):
