@@ -15,16 +15,26 @@ executed stage counts need none.
 
 Budgets are measured steady-state (one warm-up run per key for
 session-level index/catalog caches, then the counted run) at sf0.001;
-three consecutive measurements were count-identical per key (pagerank
-±2). Executed truth is SMALLER than the formatted plan suggested —
-runtime shuffle reuse absorbs much of the static duplication (reverted
-khop executes 73 stages, not 224 scans' worth) — so each key pins a
-THREE-part shape: ``jobs_min`` (the eager-checkpoint jobs ARE the fix;
-their disappearance is the regression signature — reverting 93df3cf
-drops khop from 30 jobs to 19), ``jobs_max`` (a runaway iterative loop
-adds jobs), and ``stages_max`` (duplicated subtrees and lost reuse add
-stages: reverted khop 73 > 66, item_cf 28 > 25). Verified red on a
-reverted 93df3cf for all six graph keys, green on tree.
+three consecutive measurements were count-identical per key, except
+that label propagation's first counted run read 21/33 and the next two
+20/30. Executed truth is SMALLER than the formatted plan suggested —
+runtime shuffle reuse absorbs much of the static duplication (khop with
+its checkpoints removed executes 71-77 stages, not 224 scans' worth) —
+so each key pins a THREE-part shape: ``jobs_min`` (the eager-checkpoint
+jobs ARE the fix; their disappearance is the regression signature),
+``jobs_max`` (a runaway iterative loop adds jobs), and ``stages_max``
+(duplicated subtrees and lost reuse add stages). Since the basket-form
+pair build (ac0586d) khop's jobs signature is only 20 -> 19 with the
+checkpoints removed, so its stages pin carries the detection (71-77 >
+66); item_cf is caught the same way (20-21 > 19). Verified red with
+every ``localCheckpoint`` made a no-op for all six graph keys (khop,
+label_prop, triangles, jaccard, degree, item_cf), green on tree.
+
+Re-measure the pins whenever a builder shared by these keys changes
+(``operators/graph.py``, the ``localCheckpoint`` sites): run each key as
+``test_executed_plan_census`` does, on the tree and with
+``DataFrame.localCheckpoint`` patched to return ``self``, then apply the
+two midpoint rules stated at ``PLAN_BUDGETS``.
 """
 
 from __future__ import annotations
@@ -39,25 +49,31 @@ sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
-#: key -> (max_jobs, max_stages). Steady-state measured values (see
-#: module docstring) with ~2x headroom; pre-93df3cf graph keys ran
-#: HUNDREDS of stages, so these bounds fail loudly on a lineage
-#: regression while absorbing AQE jitter.
 #: key -> (jobs_min, jobs_max, stages_max). Measured steady-state
-#: (jobs, stages) on tree / with 93df3cf reverted:
-#:   khop 30/58 vs 19/73 · label_prop 24/38 vs 13/50
-#:   triangles 22/38 vs 15/37 · jaccard 15/25 vs 10/20
-#:   degree 9/18 vs 8/21 · item_cf 11/21 vs 11/28
-#:   pagerank 21/39 · discovery_sketch 21/39 · window_exclude 10/23
-#:   ivfadc 25/47
+#: (jobs, stages) on tree / with every localCheckpoint a no-op, after
+#: the basket-form pair build (ac0586d, extended to item_cf by 532da94):
+#:   khop 20/30 vs 19/71-77 · label_prop 20/30 vs 12/48
+#:   triangles 17/27 vs 14/35-37 · jaccard 11/16 vs 9/18
+#:   degree 9/18 vs 8/21 · item_cf 10/17 vs 9/20-21
+#:   pagerank 17/29 vs 15/44-46 · discovery_sketch 21/39
+#:   window_exclude 10/23 · ivfadc 23/44
+#: Discriminating pins sit at the midpoint of the measurement they were
+#: set on: jobs_min = floor((tree + no-op) / 2) and stages_max =
+#: ceil((tree + no-op) / 2). khop's jobs_min 19, triangles' 15,
+#: jaccard's 10 and item_cf's stages_max 19 come from the counts above;
+#: khop's stages_max 66 and label_prop's 18 / 44 come from the
+#: pre-ac0586d counts (khop 30/58 vs 19/73, label_prop 24/38 vs 13/50),
+#: which the current counts still straddle. degree's jobs_min is its
+#: tree count (9 vs 8 has no integer midpoint). jobs_max and the other
+#: stages_max carry headroom over the tree count for AQE jitter.
 PLAN_BUDGETS: dict[str, tuple[int, int, int]] = {
     # iterative / multi-reference graph family (the 93df3cf class)
-    "q_khop_reach": (24, 45, 66),
+    "q_khop_reach": (19, 45, 66),
     "q_label_propagation": (18, 36, 44),
-    "q_part_triangles": (18, 33, 48),
-    "q_graph_neighbor_jaccard": (12, 23, 32),
+    "q_part_triangles": (15, 33, 48),
+    "q_graph_neighbor_jaccard": (10, 23, 32),
     "q_degree_distribution": (9, 14, 20),
-    "q_item_cf": (9, 17, 25),
+    "q_item_cf": (9, 17, 19),
     "q_pagerank": (15, 32, 50),
     # cached-subtree printing artifact (task 7): the formatted plan
     # prints 77 scans; execution is two passes — the budget pins the
