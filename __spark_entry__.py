@@ -227,6 +227,24 @@ _CHANGED_SINCE_VERDICT = (
     "q_seasonal_decompose",
     "q_skew_report",
     "q_type_weekday_chisq",
+    # ---- Epoch-snapshot stores routed through streaming/snapshots.py
+    # (one commit/read/prune module). q_neardup_registry's callable now
+    # reads its accepted epochs through snapshots.read_all_snapshots;
+    # the rest are module/deps co-flags (extras6 co-residents and
+    # importers of streaming.rollup). Store keys re-verified hash-green
+    # at sf0.001/0.01/0.1.
+    "q_dedup_registry",
+    "q_neardup_registry",
+    "q_embedding_quantize",
+    "q_order_cadence",
+    "q_percentile_bands",
+    "q_sample_weighted",
+    "q_time_to_convert",
+    "q_events_top_paths",
+    "q_gaps_islands",
+    "q_rollup_partials",
+    "q_text_tfidf_top",
+    "q_time_weighted_avg",
 )
 
 

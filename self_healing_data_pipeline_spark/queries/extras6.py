@@ -379,7 +379,7 @@ def q_neardup_registry(spark, sf_dir):
         apply_neardup_batch,
     )
     from self_healing_data_pipeline_spark.streaming.snapshots import (
-        committed_epochs,
+        read_all_snapshots,
     )
 
     d = (
@@ -404,14 +404,10 @@ def q_neardup_registry(spark, sf_dir):
             apply_neardup_batch(
                 spark, d.filter(pred), rdir, adir, epoch, threshold=0.8
             )
-        paths = [
-            os.path.join(adir, f"batch={e}") for e in committed_epochs(adir)
-        ]
-        if not paths:
+        acc = read_all_snapshots(spark, adir)
+        if acc is None:
             return spark.createDataFrame([], "doc_id bigint")
-        return spark.read.parquet(*paths).select(
-            F.col("doc_id").cast("bigint").alias("doc_id")
-        )
+        return acc.select(F.col("doc_id").cast("bigint").alias("doc_id"))
 
     accepted = run("one", [F.lit(True)])
     n_docs = d.count()

@@ -4,8 +4,8 @@ the five-stage filter cascade runs per micro-batch, and the funnel
 report (per-stage n_in / n_dropped / n_out) stays current across all
 history without ever rescanning it.
 
-State under ``state_dir`` (both epoch-keyed parquet snapshots via
-``streaming.snapshots`` — idempotent under foreachBatch's
+State under ``state_dir`` (two epoch-snapshot stores committed and read
+through ``streaming.snapshots`` — idempotent under foreachBatch's
 at-least-once replay, same discipline as ``dedup_registry``/``cdc``):
 
 - ``registry/``: fingerprints of ACCEPTED documents (those that passed
@@ -40,6 +40,7 @@ from self_healing_data_pipeline_spark.operators.cascade import (
     cascade_flags,
 )
 from self_healing_data_pipeline_spark.streaming.snapshots import (
+    commit_snapshot,
     read_latest_snapshot,
 )
 
@@ -109,11 +110,13 @@ def apply_cascade_batch(
             "n4": base["n4"] + (deltas["n4"] or 0),
             "n5": base["n5"] + n5_delta,
         }
-        spark.createDataFrame(
-            [tuple(int(totals[c]) for c in _COUNTER_COLS)],
-            ", ".join(f"{c} long" for c in _COUNTER_COLS),
-        ).write.mode("overwrite").parquet(
-            os.path.join(counters_dir, f"batch={epoch_id}")
+        commit_snapshot(
+            spark.createDataFrame(
+                [tuple(int(totals[c]) for c in _COUNTER_COLS)],
+                ", ".join(f"{c} long" for c in _COUNTER_COLS),
+            ),
+            counters_dir,
+            epoch_id,
         )
         new_entries = accepted.select("fp").withColumn(
             "first_epoch", F.lit(epoch_id).cast("long")
@@ -123,9 +126,7 @@ def apply_cascade_batch(
             if registry is not None
             else new_entries
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(registry_dir, f"batch={epoch_id}")
-        )
+        commit_snapshot(merged, registry_dir, epoch_id)
     finally:
         accepted.unpersist(blocking=False)
 

@@ -28,12 +28,10 @@ window are purged by :func:`compact_state` (age-based, run from a
 periodic maintenance task).
 
 Idempotency (exactly-once effect under foreachBatch's at-least-once
-replay): each batch writes a FULL state snapshot to
-``state_dir/batch=<epoch_id>`` — replaying a batch overwrites the same
-directory with the same bytes, and readers resolve the highest batch
-directory. Crash between write and checkpoint commit ⇒ replay ⇒ same
-snapshot, no duplication (same pattern as
-``streaming.ingest.incremental_ingest_with_quarantine``).
+replay): each batch commits a FULL state snapshot for its epoch through
+:mod:`streaming.snapshots`, which owns the layout, the commit rule and
+retention. Crash between write and checkpoint commit ⇒ replay ⇒ same
+snapshot, no duplication.
 
 Scale notes: the per-batch merge is one full-outer join on the key —
 shuffle ∝ |state| + |batch|. Rewriting the full snapshot per batch is
@@ -46,11 +44,17 @@ magnitude smaller than the event/corpus tables they describe.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from self_healing_data_pipeline_spark.streaming.drain import (
+    drain_available_now,
+)
+from self_healing_data_pipeline_spark.streaming.snapshots import (
+    commit_snapshot,
+    read_latest_snapshot,
+)
 
 
 def _payload_fingerprint(cols: list[str], frame: DataFrame | None = None):
@@ -95,15 +99,8 @@ def read_state(
     spark: SparkSession, state_dir: str, before_epoch: int | None = None
 ) -> DataFrame | None:
     """Latest COMMITTED raw snapshot (tombstones included), or None
-    pre-first-batch. Skips snapshot dirs without ``_SUCCESS`` so a crash
-    mid-write (footerless ``batch=N``, only ``_temporary`` inside) can
-    never wedge readers or replay in an UNABLE_TO_INFER_SCHEMA loop.
-    ``before_epoch`` anchors recovery reads below the replaying epoch —
-    see :mod:`streaming.snapshots`."""
-    from self_healing_data_pipeline_spark.streaming.snapshots import (
-        read_latest_snapshot,
-    )
-
+    pre-first-batch; ``before_epoch`` anchors recovery reads below the
+    replaying epoch (:mod:`streaming.snapshots`)."""
     return read_latest_snapshot(spark, state_dir, before_epoch)
 
 
@@ -118,7 +115,7 @@ def apply_changes_batch(
     """Merge one change batch into the state snapshot (foreachBatch body).
 
     Deterministic and idempotent in ``epoch_id``: replaying the same
-    batch rewrites the same ``batch=<epoch_id>`` directory.
+    batch rewrites the same epoch snapshot.
 
     SELF-HEALING on feed drift: when the change stream's payload schema
     diverges from the state's (source added a column, widened a type,
@@ -139,7 +136,7 @@ def apply_changes_batch(
         key, "__ckey"
     )
     # Strictly-prior read: replaying epoch N must not resolve its own
-    # (possibly partial, possibly being-overwritten) batch=N output —
+    # (possibly partial, possibly being-overwritten) epoch-N output —
     # the same anchor rollup's additive merge needs (streaming.snapshots).
     current = read_state(spark, state_dir, before_epoch=epoch_id)
     if current is None:
@@ -218,8 +215,7 @@ def apply_changes_batch(
             .otherwise(current["__deleted"])
             .alias("__deleted"),
         )
-    out = os.path.join(state_dir, f"batch={epoch_id}")
-    merged.write.mode("overwrite").parquet(out)
+    commit_snapshot(merged, state_dir, epoch_id)
 
 
 def apply_changes(
@@ -249,16 +245,13 @@ def apply_changes(
             batch.sparkSession, batch, state_dir, key, seq, int(epoch_id)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(_sink).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        f"CDC stream {source_dir!r}",
+        await_seconds,
     )
-    finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(f"CDC drain exceeded {await_seconds}s")
 
 
 def compact_state(
@@ -281,40 +274,15 @@ def compact_state(
     stale upserts within the reorder window still hit them
     (tests/test_cdc.py::test_compact_state_purges_old_tombstones_only).
 
-    Runs as its own epoch (idempotent under replay, same
-    ``batch=<epoch_id>`` overwrite discipline as the merge) and reads
-    the strictly-prior snapshot, so it composes with crash recovery
-    exactly like a change batch. Cost: one filter + snapshot rewrite —
-    schedule it like ``prune_snapshots``, from a maintenance task."""
+    Runs as its own epoch (idempotent under replay, same epoch-snapshot
+    overwrite discipline as the merge) and reads the strictly-prior
+    snapshot, so it composes with crash recovery exactly like a change
+    batch. Cost: one filter + snapshot rewrite — schedule it like
+    ``snapshots.prune_snapshots``, from a maintenance task."""
     current = read_state(spark, state_dir, before_epoch=epoch_id)
     if current is None:
         return
     compacted = current.filter(
         ~(F.col("__deleted") & (F.col(seq) < F.lit(horizon_seq)))
     )
-    out = os.path.join(state_dir, f"batch={epoch_id}")
-    compacted.write.mode("overwrite").parquet(out)
-
-
-def prune_snapshots(state_dir: str, keep: int = 2) -> list[int]:
-    """Retention for the batch=<epoch> snapshot scheme: drop all but the
-    newest ``keep`` snapshots and return the pruned epoch ids.
-
-    Keep ≥2 so a reader that resolved the previous head mid-prune still
-    finds its files. Never prunes the head: replay of the LAST epoch must
-    still find its strictly-prior snapshot, so callers prune only after
-    the stream's checkpoint has committed past it (i.e. from a scheduled
-    maintenance task, not inside foreachBatch)."""
-    import shutil
-
-    if not os.path.isdir(state_dir):
-        return []
-    epochs = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(state_dir)
-        if d.startswith("batch=") and d.split("=", 1)[1].isdigit()
-    )
-    doomed = epochs[:-keep] if keep > 0 else epochs
-    for e in doomed:
-        shutil.rmtree(os.path.join(state_dir, f"batch={e}"), ignore_errors=True)
-    return doomed
+    commit_snapshot(compacted, state_dir, epoch_id)

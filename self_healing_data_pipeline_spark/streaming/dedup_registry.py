@@ -14,11 +14,10 @@ owning doc id and first-seen epoch. Per batch:
    doc id — deterministic within a batch however it is partitioned);
 3. LEFT ANTI against the registry → the batch's NOVEL documents;
 4. append the novel fingerprints to the registry snapshot and emit the
-   novel documents to the accepted output, both under
-   ``batch=<epoch_id>`` directories.
+   novel documents to the accepted output, both as epoch snapshots.
 
 Exactly-once effect under foreachBatch's at-least-once replay: both
-writes are idempotent epoch-keyed overwrites, and the registry read is
+writes are idempotent epoch commits, and the registry read is
 anchored STRICTLY BEFORE the current epoch (``streaming.snapshots``),
 so replaying epoch N re-derives the same novel set from the same prior
 registry — a crash between the two writes cannot double-emit or lose a
@@ -32,20 +31,22 @@ Scale notes (100 TB): the anti-join shuffles fingerprints + ids only,
 of magnitude smaller than the corpus). Rewriting the registry snapshot
 per epoch is the plain-parquet cost of row-level append — on
 Delta/Iceberg the same body becomes a MERGE/append and only the
-anti-join remains. Retention of old epochs via
-``streaming.cdc.prune_snapshots`` (same layout).
+anti-join remains. Retention of old registry epochs via
+``streaming.snapshots.prune_snapshots``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from self_healing_data_pipeline_spark.streaming.drain import (
+    drain_available_now,
+)
 from self_healing_data_pipeline_spark.streaming.snapshots import (
-    committed_epochs,
+    commit_snapshot,
+    read_all_snapshots,
     read_latest_snapshot,
 )
 
@@ -91,9 +92,7 @@ def apply_dedup_batch(
         # between the two writes, replay re-derives the SAME novel set
         # from the prior registry and overwrites both — no loss, no
         # double-emit
-        novel.drop("__fp").write.mode("overwrite").parquet(
-            os.path.join(accepted_dir, f"batch={epoch_id}")
-        )
+        commit_snapshot(novel.drop("__fp"), accepted_dir, epoch_id)
         new_entries = novel.select(
             F.col("__fp").alias("fp"),
             F.col(id_col).alias("first_id"),
@@ -104,9 +103,7 @@ def apply_dedup_batch(
             if registry is not None
             else new_entries
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(registry_dir, f"batch={epoch_id}")
-        )
+        commit_snapshot(merged, registry_dir, epoch_id)
     finally:
         novel.unpersist(blocking=False)
 
@@ -118,14 +115,7 @@ def read_registry(spark: SparkSession, registry_dir: str) -> DataFrame | None:
 
 def read_accepted(spark: SparkSession, accepted_dir: str) -> DataFrame | None:
     """Union of every committed epoch's accepted (novel) documents."""
-    epochs = committed_epochs(accepted_dir)
-    if not epochs:
-        return None
-    out = None
-    for e in epochs:
-        df = spark.read.parquet(os.path.join(accepted_dir, f"batch={e}"))
-        out = df if out is None else out.unionByName(df)
-    return out
+    return read_all_snapshots(spark, accepted_dir)
 
 
 def dedup_stream(
@@ -141,8 +131,8 @@ def dedup_stream(
     await_seconds: int = 300,
 ) -> None:
     """Drain a directory of document files through the dedup registry
-    (``trigger(availableNow=True)``: the batch catch-up job and the
-    continuous daemon share one merge body, like ``cdc.apply_changes``)."""
+    (one merge body for the catch-up job and the daemon, like
+    ``cdc.apply_changes``)."""
     reader = spark.readStream.schema(schema).option("header", True)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -159,13 +149,10 @@ def dedup_stream(
             text_col=text_col,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(_sink).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        f"dedup stream {source_dir!r}",
+        await_seconds,
     )
-    finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(f"dedup drain exceeded {await_seconds}s")

@@ -25,9 +25,9 @@ any single item can have absorbed — its error — telescope to at most
 therefore invisible in the guarantee, the property the tests pin.
 
 Idempotency/recovery: identical to ``streaming.rollup`` — full
-snapshots under ``state_dir/batch=<epoch_id>``, strictly-prior-epoch
-reads (an additive merge must never read its own replayed output),
-``_SUCCESS``-gated resolution via :mod:`streaming.snapshots`.
+per-epoch snapshots and strictly-prior-epoch reads through
+:mod:`streaming.snapshots` (an additive merge must never read its own
+replayed output).
 
 Scale notes: the shuffle per batch carries |batch distinct items|
 pre-collapsed by a map-side partial count, then at most ``2k + 1``
@@ -38,11 +38,17 @@ re-scanned and never shuffled un-aggregated.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from self_healing_data_pipeline_spark.streaming.drain import (
+    drain_available_now,
+)
+from self_healing_data_pipeline_spark.streaming.snapshots import (
+    commit_snapshot,
+    read_latest_snapshot,
+)
 
 _SCHEMA = T.StructType(
     [
@@ -101,11 +107,6 @@ def apply_heavy_hitters_batch(
     try:
         batch_n = batch_counts.agg(F.sum("cnt")).collect()[0][0] or 0
         batch_summary = mg_compress(batch_counts, k)
-
-        from self_healing_data_pipeline_spark.streaming.snapshots import (
-            read_latest_snapshot,
-        )
-
         prior = read_latest_snapshot(spark, state_dir, before_epoch=epoch_id)
         if prior is None:
             prior_total = 0
@@ -125,9 +126,7 @@ def apply_heavy_hitters_batch(
         out = merged.select(
             "item", "cnt", F.lit(n_total).cast("long").alias("n_total")
         ).unionByName(sentinel)
-        out.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch={epoch_id}")
-        )
+        commit_snapshot(out, state_dir, epoch_id)
     finally:
         batch_counts.unpersist(blocking=False)
 
@@ -136,10 +135,6 @@ def read_summary(spark: SparkSession, state_dir: str):
     """(summary DataFrame of (item, cnt) lower bounds, stream length).
 
     Returns (None, 0) before the first committed epoch."""
-    from self_healing_data_pipeline_spark.streaming.snapshots import (
-        read_latest_snapshot,
-    )
-
     snap = read_latest_snapshot(spark, state_dir)
     if snap is None:
         return None, 0
@@ -170,13 +165,10 @@ def maintain_heavy_hitters(
             batch.sparkSession, batch, state_dir, epoch_id, k=k, item_col=item_col
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(_sink).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        f"heavy-hitters stream {source_dir!r}",
+        await_seconds,
     )
-    finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(f"heavy-hitters drain exceeded {await_seconds}s")

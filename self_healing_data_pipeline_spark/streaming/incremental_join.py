@@ -16,21 +16,21 @@ steps are shuffle-free. A mixed batch carrying both sides applies left
 then right sequentially inside one epoch, so the right delta joins the
 already-updated left — associativity the equivalence tests lock in.
 
-State layout: three epoch-snapshot stores under one root
-(``left/ right/ join/``, each ``batch=<epoch>`` parquet dirs), sharing
-``streaming/snapshots.py`` resolution — replay reads strictly-prior
-epochs and skips footerless partial writes, so at-least-once
-foreachBatch delivery re-derives identical bytes (same crash-safety
-discipline CDC and rollup use). Snapshots are SPARSE per store: an
-epoch that carried no delta for a side writes nothing there (rewriting
-an untouched side per epoch is a full-side copy at warehouse scale);
-resolution is gap-tolerant, returning the newest committed epoch below
-the anchor. Consequently per-store "latest" epochs can differ —
-cross-store consumers needing a consistent (sides, view) triple must
-pin a common epoch: read the join store's newest committed epoch E
-first (``snapshots.committed_epochs``), then pass ``before_epoch=E+1``
-to the side reads; the join snapshot at E was derived from exactly the
-side snapshots resolvable below E+1.
+State layout: three epoch-snapshot stores under one root (``left/``,
+``right/``, ``join/``; the fact ⋈ dim form uses ``fact/``, ``dim/``,
+``join/``), committed and resolved through ``streaming/snapshots.py``
+like every other store. Each side's snapshot is committed and read back
+BEFORE the view joins it, so the merge chain runs once (the write) and
+the view's lineage starts at parquet scans. Snapshots are SPARSE per
+store: an epoch that carried no delta for a side writes nothing there
+(rewriting an untouched side per epoch is a full-side copy at warehouse
+scale), and an epoch with no delta at all writes nothing anywhere.
+Consequently per-store "latest" epochs can differ — cross-store
+consumers needing a consistent (sides, view) triple must pin a common
+epoch: read the join store's newest committed epoch E first
+(``snapshots.committed_epochs``), then pass ``before_epoch=E+1`` to the
+side reads; the join snapshot at E was derived from exactly the side
+snapshots resolvable below E+1.
 
 Keys are unique per side (dimension/keyed-entity semantics, the same
 contract as CDC apply-changes); deletes are tombstones by key.
@@ -43,7 +43,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from self_healing_data_pipeline_spark.streaming.drain import (
+    drain_available_now,
+)
 from self_healing_data_pipeline_spark.streaming.snapshots import (
+    commit_snapshot,
+    prune_snapshots,
     read_latest_snapshot,
 )
 
@@ -83,26 +88,6 @@ def _merge_side(
     return kept.unionByName(upserts)
 
 
-def _commit_snapshot(
-    spark: SparkSession, df: DataFrame, store_dir: str, epoch_id: int
-) -> DataFrame:
-    """Write one epoch snapshot and return the REREAD frame.
-
-    Round-12 optimization (guide §5: materialise what is reused): each
-    epoch used to keep the merged side as a lazy plan — read prev
-    snapshot → window-collapse → anti-join → union — that re-executed
-    once for the side's own write AND again inside the join view's
-    lineage (the view joins the merged sides), roughly doubling the
-    per-epoch work. The snapshot parquet is written anyway; committing
-    it FIRST and handing consumers the reread frame makes the on-disk
-    state the single execution of the merge chain and truncates the
-    view's lineage to parquet scans. Bytes on disk are identical —
-    same rows through the same write."""
-    path = os.path.join(store_dir, f"batch={epoch_id}")
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 def apply_join_delta_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -126,6 +111,15 @@ def apply_join_delta_batch(
     """
     if left_key == right_key:
         raise ValueError("left_key and right_key must be distinct names")
+    # ONE pass over the delta batch decides which sides are present (a
+    # per-side ``isEmpty()`` probe would scan every delta twice to learn
+    # two booleans). The distinct side set is ≤2 rows at any batch size.
+    # An empty epoch changes nothing, so it commits nothing.
+    present = {
+        r["side"] for r in batch.select("side").distinct().collect()
+    }
+    if not present:
+        return
     dirs = _dirs(state_root)
     sides: dict[str, DataFrame | None] = {
         s: read_latest_snapshot(spark, dirs[s], before_epoch=epoch_id)
@@ -135,15 +129,6 @@ def apply_join_delta_batch(
         spark, dirs["join"], before_epoch=epoch_id
     )
     cols = {"left": left_cols, "right": right_cols}
-
-    # ONE pass over the delta batch decides which sides are present
-    # (round-13, guide §1.2 step 1): the per-side ``isEmpty()`` probes
-    # each ran their own job over the batch — two scans of every delta
-    # to learn two booleans. The distinct side set is ≤2 rows at any
-    # batch size.
-    present = {
-        r["side"] for r in batch.select("side").distinct().collect()
-    }
     for side, key, other in (
         ("left", left_key, "right"),
         ("right", right_key, "left"),
@@ -152,8 +137,11 @@ def apply_join_delta_batch(
             continue
         delta = batch.filter(F.col("side") == side).drop("side")
         d1 = _collapse_delta(delta.select("op", "seq", *cols[side]), key)
-        sides[side] = _commit_snapshot(
-            spark, _merge_side(sides[side], d1, key), dirs[side], epoch_id
+        merged = _merge_side(sides[side], d1, key)
+        commit_snapshot(merged, dirs[side], epoch_id)
+        # the view joins the committed snapshot, not the merge plan
+        sides[side] = read_latest_snapshot(
+            spark, dirs[side], before_epoch=epoch_id + 1
         )
 
         # delta-join: retract every pair carrying a touched key, then
@@ -180,22 +168,8 @@ def apply_join_delta_batch(
                 fresh if join_view is None else join_view.unionByName(fresh)
             )
 
-    # An unchanged side is NOT rewritten into this epoch's directory
-    # (round-13, guide §5/§6: the carry-forward copied the full side
-    # snapshot per epoch — at warehouse scale a complete rewrite of an
-    # untouched dimension every batch). Snapshot resolution is
-    # gap-tolerant: ``read_latest_snapshot(before_epoch=N)`` returns the
-    # newest committed epoch < N, so readers and the next epoch's merge
-    # find the older snapshot. Cross-store consistency contract: per-
-    # store "latest" epochs can now differ, so a consumer reading a
-    # (side, view) pair must pin a common epoch — read the join store's
-    # newest committed epoch E first and pass ``before_epoch=E+1`` to
-    # the side reads (the join snapshot at E was derived from exactly
-    # the side snapshots resolvable below E+1).
     if join_view is not None:
-        join_view.write.mode("overwrite").parquet(
-            os.path.join(dirs["join"], f"batch={epoch_id}")
-        )
+        commit_snapshot(join_view, dirs["join"], epoch_id)
 
 
 def read_join_view(spark: SparkSession, state_root: str) -> DataFrame | None:
@@ -223,9 +197,10 @@ def maintain_join(
     max_files_per_trigger: int | None = None,
 ):
     """True-streaming wiring: a file source of mixed-side delta batches
-    drives :func:`apply_join_delta_batch` through foreachBatch with
-    ``trigger(availableNow=True)`` — the same shape as
-    ``rollup.maintain_rollup``. Returns after the stream drains."""
+    drives :func:`apply_join_delta_batch` through foreachBatch — the
+    same shape as ``rollup.maintain_rollup``. Returns the finished query
+    after the stream drains; raises ``TimeoutError`` if it does not
+    drain within the shared bound."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -233,7 +208,7 @@ def maintain_join(
 
     def _sink(batch: DataFrame, epoch_id: int) -> None:
         apply_join_delta_batch(
-            spark,
+            batch.sparkSession,
             batch,
             state_root,
             left_key=left_key,
@@ -243,14 +218,12 @@ def maintain_join(
             epoch_id=epoch_id,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain_available_now(
+        stream.writeStream.foreachBatch(_sink).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        f"join-view stream {source_dir!r}",
     )
-    q.awaitTermination()
-    return q
 
 
 # ---------------------------------------------------------------------
@@ -302,23 +275,26 @@ def apply_fact_dim_delta_batch(
     """
     if fact_fk == dim_key:
         raise ValueError("fact_fk and dim_key must be distinct names")
+    # one side-presence pass; an empty epoch commits nothing (see
+    # apply_join_delta_batch)
+    present = {
+        r["side"] for r in batch.select("side").distinct().collect()
+    }
+    if not present:
+        return
     dirs = _fd_dirs(state_root)
     facts = read_latest_snapshot(spark, dirs["fact"], before_epoch=epoch_id)
     dims = read_latest_snapshot(spark, dirs["dim"], before_epoch=epoch_id)
     view = read_latest_snapshot(spark, dirs["join"], before_epoch=epoch_id)
 
-    # ONE pass over the delta batch decides which sides are present
-    # (round-13; see apply_join_delta_batch).
-    present = {
-        r["side"] for r in batch.select("side").distinct().collect()
-    }
-
     # --- fact delta first (joins see this epoch's facts below) ---
     if "fact" in present:
         fd = batch.filter(F.col("side") == "fact")
         d1 = _collapse_delta(fd.select("op", "seq", *fact_cols), fact_key)
-        facts = _commit_snapshot(
-            spark, _merge_side(facts, d1, fact_key), dirs["fact"], epoch_id
+        merged = _merge_side(facts, d1, fact_key)
+        commit_snapshot(merged, dirs["fact"], epoch_id)
+        facts = read_latest_snapshot(
+            spark, dirs["fact"], before_epoch=epoch_id + 1
         )
         touched = d1.select(fact_key)
         if view is not None:
@@ -334,8 +310,10 @@ def apply_fact_dim_delta_batch(
     if "dim" in present:
         dd = batch.filter(F.col("side") == "dim")
         d1 = _collapse_delta(dd.select("op", "seq", *dim_cols), dim_key)
-        dims = _commit_snapshot(
-            spark, _merge_side(dims, d1, dim_key), dirs["dim"], epoch_id
+        merged = _merge_side(dims, d1, dim_key)
+        commit_snapshot(merged, dirs["dim"], epoch_id)
+        dims = read_latest_snapshot(
+            spark, dirs["dim"], before_epoch=epoch_id + 1
         )
         touched = d1.select(dim_key)
         if view is not None:
@@ -359,14 +337,8 @@ def apply_fact_dim_delta_batch(
             )
             view = fresh if view is None else view.unionByName(fresh)
 
-    # Unchanged sides are not carried forward (round-13; see
-    # apply_join_delta_batch — snapshot resolution is gap-tolerant, and
-    # rewriting an untouched fact or dimension store per epoch is a
-    # full-side copy at warehouse scale).
     if view is not None:
-        view.write.mode("overwrite").parquet(
-            os.path.join(dirs["join"], f"batch={epoch_id}")
-        )
+        commit_snapshot(view, dirs["join"], epoch_id)
 
 
 def read_fact_dim_view(
@@ -377,15 +349,10 @@ def read_fact_dim_view(
 
 
 def prune_join_snapshots(state_root: str, keep: int = 2) -> dict[str, list[int]]:
-    """Retention across all three stores (left/right/join — and the
-    fact/dim layout shares the same names via ``_fd_dirs``): drop all
-    but the newest ``keep`` epochs per store, reusing the CDC pruner's
-    rules (keep ≥2; run from maintenance, not inside foreachBatch).
-    Returns pruned epoch ids per store."""
-    from self_healing_data_pipeline_spark.streaming.cdc import (
-        prune_snapshots,
-    )
-
+    """Retention across the view's stores (left/right/join, or
+    fact/dim/join): :func:`snapshots.prune_snapshots` per store, so run
+    it from maintenance, not inside foreachBatch. Returns pruned epoch
+    ids per store."""
     out: dict[str, list[int]] = {}
     for name in ("left", "right", "fact", "dim", "join"):
         d = os.path.join(state_root, name)

@@ -22,6 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from self_healing_data_pipeline_spark.streaming.drain import (
+    drain_available_now,
+)
+
 
 def incremental_ingest(
     spark: SparkSession,
@@ -48,24 +52,14 @@ def incremental_ingest(
     stream = stream.withColumn("_ingested_at", F.current_timestamp())
     if transform is not None:
         stream = transform(stream)
-    q = (
+    drain_available_now(
         stream.writeStream.format("parquet")
         .option("path", dest_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        f"ingest stream {source_dir!r}",
+        await_seconds,
     )
-    finished = q.awaitTermination(await_seconds)
-    if not finished:
-        # Don't return pretending the drain completed: stop the query so
-        # the checkpoint stays consistent and surface the timeout.
-        q.stop()
-        raise TimeoutError(
-            f"incremental_ingest did not drain {source_dir!r} within "
-            f"{await_seconds}s (processed files remain recorded in the "
-            f"checkpoint; re-run to resume)"
-        )
 
 
 def ingested_table(spark: SparkSession, dest_dir: str) -> DataFrame:
@@ -166,16 +160,10 @@ def incremental_ingest_with_quarantine(
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(route).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        f"ingest-with-quarantine stream {source_dir!r}",
+        await_seconds,
     )
-    finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"ingest-with-quarantine did not drain {source_dir!r} within "
-            f"{await_seconds}s (checkpoint retains progress; re-run to resume)"
-        )

@@ -32,7 +32,7 @@ corpus). Per batch:
    per-component in executors (``applyInPandas``) — components are
    near-dup clusters, bounded by the bucket caps;
 5. append survivors' signatures to the registry and emit them to the
-   accepted output, both idempotent ``batch=<epoch>`` writes with
+   accepted output, both idempotent epoch commits with
    strictly-prior-epoch reads (``streaming.snapshots``) — replay-safe
    exactly like ``streaming.dedup_registry``.
 
@@ -46,8 +46,6 @@ SURVIVING document.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,6 +53,7 @@ from self_healing_data_pipeline_spark.operators.dedup import (
     minhash_signatures,
 )
 from self_healing_data_pipeline_spark.streaming.snapshots import (
+    commit_snapshot,
     read_latest_snapshot,
 )
 
@@ -319,14 +318,11 @@ def _write_outputs(
     registry_dir: str,
     epoch_id: int,
 ) -> None:
-    """Emit the epoch's accepted rows and the merged registry snapshot
-    (both idempotent ``batch=<epoch>`` overwrites)."""
+    """Commit the epoch's accepted rows and the merged registry snapshot."""
     accepted = batch.join(
         survivors.select(F.col("__id").alias(id_col)), id_col
     )
-    accepted.write.mode("overwrite").parquet(
-        os.path.join(accepted_dir, f"batch={epoch_id}")
-    )
+    commit_snapshot(accepted, accepted_dir, epoch_id)
     new_entries = survivors.select(
         F.col("__id").alias("doc_id"),
         F.col("__sig").alias("sig"),
@@ -337,9 +333,7 @@ def _write_outputs(
         if registry is not None
         else new_entries
     )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(registry_dir, f"batch={epoch_id}")
-    )
+    commit_snapshot(merged, registry_dir, epoch_id)
 
 
 def read_neardup_registry(

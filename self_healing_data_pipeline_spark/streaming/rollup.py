@@ -11,9 +11,11 @@ with the snapshot, and the result is independent of how history was
 batched (the same algebra Spark's own partial/final aggregation uses
 inside a single query, lifted across batches).
 
-Idempotency: identical to ``streaming.cdc`` — each epoch writes a full
-snapshot to ``state_dir/batch=<epoch_id>``; replay rewrites the same
-directory; readers resolve the highest epoch. Exactly-once effect under
+Idempotency: identical to ``streaming.cdc`` — each epoch commits a full
+snapshot through :mod:`streaming.snapshots`, and the merge reads the
+snapshot STRICTLY BEFORE its epoch: CDC's latest-wins merge would
+survive re-reading its own output, but an additive merge would
+double-count the replayed batch. Exactly-once effect under
 foreachBatch's at-least-once replay, PROVIDED the upstream source
 deduplicates deliveries per epoch (the file source does).
 
@@ -25,32 +27,16 @@ stream; on Delta/Iceberg the same body becomes MERGE INTO.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from self_healing_data_pipeline_spark.streaming.cdc import read_state
-
-
-def _read_state_before(
-    spark: SparkSession, state_dir: str, epoch_id: int
-) -> DataFrame | None:
-    """Latest snapshot from epochs STRICTLY BEFORE ``epoch_id``.
-
-    CDC can re-read its own epoch's output on replay because latest-wins
-    re-merges to the same answer (max is idempotent). An ADDITIVE merge
-    is not: replaying an epoch that reads its own snapshot double-counts
-    the batch. Anchoring the read below the current epoch makes replay
-    rewrite the same bytes instead. Shared resolution (including the
-    skip-partial-writes ``_SUCCESS`` rule) lives in
-    :mod:`streaming.snapshots`.
-    """
-    from self_healing_data_pipeline_spark.streaming.snapshots import (
-        read_latest_snapshot,
-    )
-
-    return read_latest_snapshot(spark, state_dir, before_epoch=epoch_id)
+from self_healing_data_pipeline_spark.streaming.drain import (
+    drain_available_now,
+)
+from self_healing_data_pipeline_spark.streaming.snapshots import (
+    commit_snapshot,
+    read_latest_snapshot,
+)
 
 
 def aggregate_batch(
@@ -85,7 +71,7 @@ def merge_rollup(
     batch contributes, and batch order is irrelevant by commutativity.
     """
     group_cols = ["bucket", *keys]
-    current = _read_state_before(spark, state_dir, epoch_id)
+    current = read_latest_snapshot(spark, state_dir, before_epoch=epoch_id)
     if current is None:
         merged = batch_partials
     else:
@@ -97,13 +83,12 @@ def merge_rollup(
                 F.sum("sum_cents").alias("sum_cents"),
             )
         )
-    out = os.path.join(state_dir, f"batch={epoch_id}")
-    merged.write.mode("overwrite").parquet(out)
+    commit_snapshot(merged, state_dir, epoch_id)
 
 
 def read_rollup(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Finished answers from the partials: n, sum, and derived avg."""
-    snap = read_state(spark, state_dir)
+    snap = read_latest_snapshot(spark, state_dir)
     if snap is None:
         return None
     return snap.select(
@@ -146,13 +131,10 @@ def maintain_rollup(
         )
         merge_rollup(batch.sparkSession, partials, state_dir, keys, int(epoch_id))
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(_sink).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        f"rollup stream {source_dir!r}",
+        await_seconds,
     )
-    finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(f"rollup drain exceeded {await_seconds}s")

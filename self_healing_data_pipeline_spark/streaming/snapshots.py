@@ -1,24 +1,29 @@
-"""Epoch-snapshot resolution shared by the foreachBatch state stores
-(``streaming.cdc``, ``streaming.rollup``).
+"""The epoch-snapshot layout, owned here and nowhere else.
 
-Both subsystems persist state as full parquet snapshots under
-``state_dir/batch=<epoch_id>`` and rely on "readers resolve the newest
-snapshot" for recovery. Two hazards live in that resolution, and both
-belong here so every store gets the same fix:
+Seven foreachBatch state stores persist through this module:
+``streaming.cdc``, ``streaming.rollup``, ``streaming.heavy_hitters``,
+``streaming.cascade`` (registry and counters), ``streaming.dedup_registry``
+and ``streaming.neardup_registry`` (registry and accepted output), and
+``streaming.incremental_join`` (two sides and the view). Each store
+directory holds one parquet snapshot per epoch, ``<dir>/batch=<epoch_id>``;
+no other module builds that path.
 
-* **Partial writes.** A crash mid-``parquet()`` leaves a footerless
-  ``batch=N`` directory (only ``_temporary`` inside, no ``_SUCCESS``).
-  A reader that resolves it fails with ``UNABLE_TO_INFER_SCHEMA`` on
-  every restart — a permanent crash loop on the recovery path. Snapshot
-  resolution therefore skips any epoch directory without the
-  ``_SUCCESS`` marker Spark's commit protocol writes last.
-* **Self-reads on replay.** foreachBatch is at-least-once: epoch N can
-  re-run after its own snapshot committed. A merge that reads the
-  newest snapshot then reads its OWN output; additive merges
-  double-count, and even latest-wins merges depend on unspecified
-  overwrite-while-read behavior. Passing ``before_epoch=N`` anchors the
-  read to epochs strictly below N, so replay re-derives the same bytes
-  from the same inputs.
+* **Commit.** :func:`commit_snapshot` overwrites the epoch's directory,
+  so a replayed epoch rewrites the same bytes. Spark's commit protocol
+  writes ``_SUCCESS`` last; a crash mid-write leaves a footerless
+  directory (only ``_temporary`` inside) that must never be read —
+  resolving it fails ``UNABLE_TO_INFER_SCHEMA`` on every restart, a
+  permanent crash loop on the recovery path. Every reader here therefore
+  sees only ``_SUCCESS``-marked epochs.
+* **Read.** foreachBatch is at-least-once: epoch N can re-run after its
+  own snapshot committed. A merge that read the newest snapshot would
+  then read its OWN output (additive merges double-count), so stores
+  pass ``before_epoch=N`` and replay re-derives the same bytes from the
+  same inputs. Resolution is gap-tolerant: a store that skips an epoch
+  resolves the newest committed epoch below the anchor.
+* **Retain.** :func:`prune_snapshots` keeps the newest ``keep``
+  committed epochs and never touches a directory above the newest
+  committed one (a write that may still be in flight).
 
 Scale notes: pure driver-side directory listing — one ``listdir`` of
 epoch directories (hundreds, pruned by retention), never a data scan.
@@ -27,25 +32,40 @@ epoch directories (hundreds, pruned by retention), never a data scan.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _path(state_dir: str, epoch_id: int) -> str:
+    return os.path.join(state_dir, f"batch={epoch_id}")
+
+
+def _epoch_dirs(state_dir: str) -> list[int]:
+    """Every epoch directory, committed or not."""
+    if not os.path.isdir(state_dir):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(state_dir)
+        if d.startswith("batch=") and d.split("=", 1)[1].isdigit()
+    )
 
 
 def committed_epochs(state_dir: str, before_epoch: int | None = None) -> list[int]:
     """Sorted epoch ids with a complete (``_SUCCESS``-marked) snapshot,
     optionally restricted to epochs strictly below ``before_epoch``."""
-    if not os.path.isdir(state_dir):
-        return []
-    epochs = []
-    for d in os.listdir(state_dir):
-        if not (d.startswith("batch=") and d.split("=", 1)[1].isdigit()):
-            continue
-        e = int(d.split("=", 1)[1])
-        if before_epoch is not None and e >= before_epoch:
-            continue
-        if os.path.exists(os.path.join(state_dir, d, "_SUCCESS")):
-            epochs.append(e)
-    return sorted(epochs)
+    return [
+        e
+        for e in _epoch_dirs(state_dir)
+        if (before_epoch is None or e < before_epoch)
+        and os.path.exists(os.path.join(_path(state_dir, e), "_SUCCESS"))
+    ]
+
+
+def commit_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
+    """Write ``df`` as the epoch's snapshot (an idempotent overwrite)."""
+    df.write.mode("overwrite").parquet(_path(state_dir, epoch_id))
 
 
 def read_latest_snapshot(
@@ -56,4 +76,36 @@ def read_latest_snapshot(
     epochs = committed_epochs(state_dir, before_epoch)
     if not epochs:
         return None
-    return spark.read.parquet(os.path.join(state_dir, f"batch={epochs[-1]}"))
+    return spark.read.parquet(_path(state_dir, epochs[-1]))
+
+
+def read_all_snapshots(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """Union of every committed epoch's snapshot (one scan over all of
+    them), or None before the first commit — the read side of the
+    per-epoch output stores."""
+    epochs = committed_epochs(state_dir)
+    if not epochs:
+        return None
+    return spark.read.parquet(*(_path(state_dir, e) for e in epochs))
+
+
+def prune_snapshots(state_dir: str, keep: int = 2) -> list[int]:
+    """Retention: drop every epoch directory below the newest ``keep``
+    committed snapshots and return the pruned epoch ids.
+
+    Only committed epochs count toward ``keep``, and nothing above the
+    newest committed epoch is touched, so a crashed or in-flight write
+    never costs a committed snapshot. Keep ≥2 so a reader that resolved
+    the previous head mid-prune still finds its files. Replay of the
+    last epoch needs its strictly-prior snapshot, so prune only after
+    the stream's checkpoint has committed past it (from a scheduled
+    maintenance task, not inside foreachBatch)."""
+    committed = committed_epochs(state_dir)
+    kept = committed[-keep:] if keep > 0 else []
+    if len(kept) == len(committed):
+        return []
+    cutoff = kept[0] if kept else committed[-1] + 1
+    doomed = [e for e in _epoch_dirs(state_dir) if e < cutoff]
+    for e in doomed:
+        shutil.rmtree(_path(state_dir, e), ignore_errors=True)
+    return doomed

@@ -14,6 +14,10 @@ from self_healing_data_pipeline_spark.streaming.cdc import (
     live_state,
     read_state,
 )
+from self_healing_data_pipeline_spark.streaming.snapshots import (
+    committed_epochs,
+    prune_snapshots,
+)
 
 SCHEMA = T.StructType(
     [
@@ -178,10 +182,7 @@ def test_final_state_is_batch_partition_order_independent(spark, tmp_path):
             assert _state_dict(spark, state) == expected, (batches, perm)
 
 
-def test_prune_snapshots_keeps_latest_and_state_readable(spark, tmp_path):
-    from self_healing_data_pipeline_spark.streaming.cdc import prune_snapshots
-
-    state = str(tmp_path / "state")
+def _four_epochs(spark, state):
     for epoch in range(4):
         apply_changes_batch(
             spark,
@@ -193,10 +194,29 @@ def test_prune_snapshots_keeps_latest_and_state_readable(spark, tmp_path):
             "seq",
             epoch_id=epoch,
         )
+
+
+def test_prune_snapshots_keeps_latest_and_state_readable(spark, tmp_path):
+    state = str(tmp_path / "state")
+    _four_epochs(spark, state)
     before = _state_dict(spark, state)
     pruned = prune_snapshots(state, keep=2)
     assert pruned == [0, 1]
     assert _state_dict(spark, state) == before  # head snapshot untouched
+
+
+def test_prune_snapshots_counts_only_committed_epochs(spark, tmp_path):
+    """A crashed write (footerless ``batch=4``, only ``_temporary``
+    inside) must not count toward ``keep``: pruning keeps the two newest
+    COMMITTED snapshots and leaves the directory above them alone."""
+    state = str(tmp_path / "state")
+    _four_epochs(spark, state)
+    (tmp_path / "state" / "batch=4" / "_temporary").mkdir(parents=True)
+    before = _state_dict(spark, state)
+    assert prune_snapshots(state, keep=2) == [0, 1]
+    assert committed_epochs(state) == [2, 3]
+    assert os.path.isdir(tmp_path / "state" / "batch=4")
+    assert _state_dict(spark, state) == before
 
 
 def test_compact_state_purges_old_tombstones_only(spark, tmp_path):
@@ -287,37 +307,6 @@ def test_cdc_heals_change_feed_schema_drift(spark, tmp_path):
     rows = {r["id"]: r for r in snap.collect()}
     assert rows[1]["name"] == "alice" and rows[1]["email"] is None
     assert rows[2**40]["email"] == "b@x.io" and rows[2**40]["name"] is None
-
-
-def test_partial_snapshot_is_skipped_not_crash_looped(spark, tmp_path):
-    """A crash mid-write leaves a footerless batch=N dir (no _SUCCESS).
-    Readers and replay must resolve the last COMMITTED snapshot instead
-    of failing UNABLE_TO_INFER_SCHEMA forever (the advice-verified crash
-    loop on the recovery path)."""
-    state = str(tmp_path / "state")
-    apply_changes_batch(
-        spark,
-        spark.createDataFrame([("upsert", 1, 1, "a")], SCHEMA),
-        state,
-        "id",
-        "seq",
-        epoch_id=0,
-    )
-    # simulate the crash: epoch-1 dir exists but only _temporary inside
-    partial = tmp_path / "state" / "batch=1"
-    (partial / "_temporary").mkdir(parents=True)
-    assert _state_dict(spark, state) == {1: (1, "a")}  # reader skips it
-    # replay of epoch 1 recovers: reads epoch 0, overwrites the partial
-    apply_changes_batch(
-        spark,
-        spark.createDataFrame([("upsert", 2, 2, "b")], SCHEMA),
-        state,
-        "id",
-        "seq",
-        epoch_id=1,
-    )
-    assert _state_dict(spark, state) == {1: (1, "a"), 2: (2, "b")}
-    assert os.path.exists(partial / "_SUCCESS")
 
 
 def test_replay_reads_strictly_prior_epoch(spark, tmp_path):

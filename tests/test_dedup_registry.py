@@ -1,6 +1,6 @@
 """Streaming dedup registry (streaming.dedup_registry): cross-batch
-keep-first suppression, batching invisibility, replay idempotence,
-crash recovery, and the true readStream wiring."""
+keep-first suppression, batching invisibility, replay idempotence and
+the true readStream wiring (crash recovery: tests/test_crash_matrix.py)."""
 
 from __future__ import annotations
 
@@ -94,18 +94,6 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert {
         r["fp"]: r["first_id"] for r in read_registry(spark, rdir).collect()
     } == once_reg
-
-
-def test_partial_registry_snapshot_is_skipped(spark, tmp_path):
-    rdir, adir = str(tmp_path / "reg"), str(tmp_path / "acc")
-    _apply(spark, [(1, "a")], rdir, adir, 0)
-    # crash mid-write of epoch 1's registry: footerless dir, no _SUCCESS
-    partial = tmp_path / "reg" / "batch=1"
-    (partial / "_temporary").mkdir(parents=True)
-    # replay of epoch 1 resolves epoch 0 and recovers
-    _apply(spark, [(2, "a"), (3, "b")], rdir, adir, 1)
-    assert _accepted_ids(spark, adir) == [1, 3]
-    assert os.path.exists(partial / "_SUCCESS")
 
 
 def test_dedup_stream_end_to_end(spark, tmp_path):

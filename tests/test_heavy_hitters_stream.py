@@ -1,7 +1,7 @@
 """Continuous heavy-hitters maintenance (streaming.heavy_hitters): the
-Misra-Gries guarantees must hold after ANY batching of the stream,
-replay must be idempotent, and recovery must skip partial snapshots —
-the registry-family contract applied to frequency state."""
+Misra-Gries guarantees must hold after ANY batching of the stream and
+replay must be idempotent — the registry-family contract applied to
+frequency state (crash recovery: tests/test_crash_matrix.py)."""
 
 from __future__ import annotations
 
@@ -96,18 +96,6 @@ def test_replay_is_idempotent(spark, tmp_path):
         for r in spark.read.parquet(os.path.join(state, "batch=1")).collect()
     )
     assert after_replay == after_first
-
-
-def test_recovery_skips_partial_snapshot(spark, tmp_path):
-    state = str(tmp_path / "sp")
-    apply_heavy_hitters_batch(spark, _stream(spark), state, 0, k=K)
-    good, good_n = read_summary(spark, state)
-    good_rows = sorted((r["item"], r["cnt"]) for r in good.collect())
-    # crash mid-write: a newer epoch dir without _SUCCESS
-    os.makedirs(os.path.join(state, "batch=7"))
-    summary, n_total = read_summary(spark, state)
-    assert n_total == good_n
-    assert sorted((r["item"], r["cnt"]) for r in summary.collect()) == good_rows
 
 
 def test_readstream_drain_matches_direct_apply(spark, tmp_path):

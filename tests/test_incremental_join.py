@@ -166,6 +166,28 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert _view(spark, root) == before == {(1, "a", 1, 8)}
 
 
+def test_empty_delta_epoch_commits_nothing(spark, tmp_path):
+    """An epoch whose delta touches neither side leaves the view as it
+    is: no join snapshot is written, and the view reads back unchanged
+    (resolution is gap-tolerant)."""
+    root = tmp_path / "empty"
+    _apply(
+        spark,
+        [
+            _row("left", "upsert", 1, cust_id=1, cust_name="a"),
+            _row("right", "upsert", 1, ord_cust=1, ord_total=7),
+        ],
+        root,
+        0,
+    )
+    before = _view(spark, root)
+    _apply(spark, [], root, 1)
+    assert not (root / "join" / "batch=1").exists()
+    assert _view(spark, root) == before == {(1, "a", 1, 7)}
+    _apply(spark, [_row("right", "upsert", 2, ord_cust=1, ord_total=8)], root, 2)
+    assert _view(spark, root) == {(1, "a", 1, 8)}
+
+
 def test_maintain_join_streaming_wiring(spark, tmp_path):
     import time
 
@@ -298,6 +320,23 @@ def _fd_view(spark, root):
         (r["order_id"], r["cust_fk"], r["amount"], r["cid"], r["segment"])
         for r in df.collect()
     }
+
+
+def test_fact_dim_empty_delta_epoch_commits_nothing(spark, tmp_path):
+    root = tmp_path / "fd_empty"
+    _fd_apply(
+        spark,
+        [
+            _fd_row("dim", "upsert", 1, cid=1, segment="s"),
+            _fd_row("fact", "upsert", 1, order_id=1, cust_fk=1, amount=5),
+        ],
+        root,
+        0,
+    )
+    before = _fd_view(spark, root)
+    _fd_apply(spark, [], root, 1)
+    assert not (root / "join" / "batch=1").exists()
+    assert _fd_view(spark, root) == before == {(1, 1, 5, 1, "s")}
 
 
 def test_dim_update_repairs_all_referencing_facts(spark, tmp_path):

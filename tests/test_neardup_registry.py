@@ -60,17 +60,12 @@ def _distinct_text(seed: int):
 
 
 def _accepted_ids(spark, adir):
-    import os
-
     from self_healing_data_pipeline_spark.streaming.snapshots import (
-        committed_epochs,
+        read_all_snapshots,
     )
 
-    ids = []
-    for e in committed_epochs(adir):
-        df = spark.read.parquet(os.path.join(adir, f"batch={e}"))
-        ids.extend(r["doc_id"] for r in df.collect())
-    return sorted(ids)
+    acc = read_all_snapshots(spark, adir)
+    return sorted(r["doc_id"] for r in acc.collect()) if acc is not None else []
 
 
 def test_cross_batch_near_dup_suppressed(spark, tmp_path):

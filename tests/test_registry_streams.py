@@ -32,6 +32,7 @@ from self_healing_data_pipeline_spark.streaming.neardup_registry import (
 )
 from self_healing_data_pipeline_spark.streaming.snapshots import (
     committed_epochs,
+    read_all_snapshots,
 )
 
 SCHEMA = T.StructType(
@@ -167,15 +168,8 @@ def test_neardup_registry_stream_with_watermark_equals_batch_twin(
     apply_neardup_batch(spark, full, trdir, tadir, 0, threshold=0.8)
 
     def _ids(accepted_dir):
-        ids = set()
-        for e in committed_epochs(accepted_dir):
-            ids.update(
-                r["doc_id"]
-                for r in spark.read.parquet(
-                    os.path.join(accepted_dir, f"batch={e}")
-                ).collect()
-            )
-        return ids
+        acc = read_all_snapshots(spark, accepted_dir)
+        return {r["doc_id"] for r in acc.collect()} if acc is not None else set()
 
     got, want = _ids(adir), _ids(tadir)
     assert got == want, (

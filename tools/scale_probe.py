@@ -738,16 +738,19 @@ def main() -> None:
         """Fixed 1k-doc batch against a 1x/10x fingerprint registry:
         steady-state batch cost is the anti-join + registry rewrite,
         both ∝ |registry|. The registry is SEEDED directly (signature
-        table written as batch=0) — the probe measures the steady batch
+        table committed as epoch 0) — the probe measures the steady batch
         apply, not first-time ingestion."""
         from self_healing_data_pipeline_spark.streaming.dedup_registry import (
             fingerprint,
+        )
+        from self_healing_data_pipeline_spark.streaming.snapshots import (
+            commit_snapshot,
         )
 
         sd = os.path.join(root, f"dreg_{tag}")
         _sh.rmtree(sd, ignore_errors=True)
         rdir, adir = os.path.join(sd, "reg"), os.path.join(sd, "acc")
-        spark.range(n_state).select(
+        seed = spark.range(n_state).select(
             SF.col("id").alias("doc_id"),
             SF.concat(SF.lit("seed text body number "), SF.col("id")).alias(
                 "text"
@@ -756,7 +759,8 @@ def main() -> None:
             fingerprint("text").alias("fp"),
             SF.col("doc_id").alias("first_id"),
             SF.lit(0).cast("long").alias("first_epoch"),
-        ).write.mode("overwrite").parquet(os.path.join(rdir, "batch=0"))
+        )
+        commit_snapshot(seed, rdir, 0)
         batch = spark.range(1000).select(
             (SF.col("id") + n_state).alias("doc_id"),
             SF.when(
@@ -775,10 +779,13 @@ def main() -> None:
     def neardup_registry_steady(n_state: int, tag: str) -> float:
         """Fixed 300-doc batch against a 1x/10x signature registry: the
         (band, bucket) join + registry rewrite dominate, ∝ |registry|.
-        The registry is SEEDED directly (signatures written as batch=0)
-        so the probe measures the steady batch apply."""
+        The registry is SEEDED directly (signatures committed as epoch
+        0) so the probe measures the steady batch apply."""
         from self_healing_data_pipeline_spark.operators.dedup import (
             minhash_signatures,
+        )
+        from self_healing_data_pipeline_spark.streaming.snapshots import (
+            commit_snapshot,
         )
 
         sd = os.path.join(root, f"nreg_{tag}")
@@ -800,11 +807,12 @@ def main() -> None:
         init = spark.range(n_state).select(
             SF.col("id").alias("doc_id"), mk_text.alias("text")
         )
-        minhash_signatures(init, "doc_id", "text").select(
+        seed = minhash_signatures(init, "doc_id", "text").select(
             SF.col("__id").alias("doc_id"),
             SF.col("__sig").alias("sig"),
             SF.lit(0).cast("long").alias("first_epoch"),
-        ).write.mode("overwrite").parquet(os.path.join(rdir, "batch=0"))
+        )
+        commit_snapshot(seed, rdir, 0)
         batch = spark.range(300).select(
             (SF.col("id") + n_state).alias("doc_id"), mk_text.alias("text")
         )
