@@ -17,6 +17,12 @@ Re-expresses the reference's step state machine and failure handling
   ``validate`` callables, with retry.
 - Load-then-read-back verification, where read-back failure is a WARNING
   not a failure (``App.tsx:192-199``) → ``verify_readback``.
+- Load copies the parsed rows into the database, after which the table no
+  longer depends on the file (``pgliteService.ts:51-78``) → the Upload
+  stage parses the file once into a local checkpoint, and the loaded
+  table is a materialized snapshot of the upload: profiling, the freeze
+  cast, the read-back and every later scan read those blocks, never the
+  file again.
 
 Plus what a Spark pipeline needs that a browser app doesn't: retry with
 exponential backoff (transient executor/IO failures are the norm at
@@ -229,6 +235,12 @@ def verify_readback(
         return None, f"read-back verification failed: {exc}"
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame now rather than at
+    the ContextCleaner's next pass."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def ingest_file_pipeline(
     spark: SparkSession,
     path: str,
@@ -243,6 +255,22 @@ def ingest_file_pipeline(
     The two review gates mirror the reference's approve/edit checkpoints
     (``App.tsx:246-254,283-291``); with no approver attached they
     auto-approve so headless runs are unchanged.
+
+    The file is parsed once. Upload wraps the parse in a lazy
+    ``localCheckpoint``, and the empty-guard's ``isEmpty`` job both
+    proves the upload has a row and fills the checkpoint's blocks (a
+    file split into several partitions takes one more job for the
+    partitions ``isEmpty`` did not read; a rejected upload's blocks are
+    released at once). Everything after reads those blocks, so the
+    loaded table is a materialized snapshot of the upload, as the
+    reference's copy into PGlite is: deleting or rewriting the file
+    afterwards does not change it, and re-ingesting a rewritten file
+    loads the new rows (the checkpoint is not matched by path the way
+    ``cache()`` is). A replaced upload's blocks are freed by Spark's
+    ContextCleaner once nothing references them. Trade-off: the blocks
+    live on the executors, so losing one (an executor lost) fails reads
+    of the table instead of re-reading the file; re-ingesting the file
+    heals it.
     """
     from self_healing_data_pipeline_spark.functions.scalar import sanitize_identifier
     from self_healing_data_pipeline_spark.plans.catalog import (
@@ -261,8 +289,9 @@ def ingest_file_pipeline(
 
     def parse(_):
         t0 = time.time()
-        df = read_any(spark, path)
+        df = read_any(spark, path).localCheckpoint(eager=False)
         if df.isEmpty():
+            _release_checkpoint(df)
             raise RejectedInputError("The file contains no data rows.")
         lineage.record("Upload", [path], f"{name}:raw", df, t0)
         return df

@@ -17,12 +17,17 @@ error 1.04/sqrt(2**13) ≈ 1.15 %), not from HLL++ (``approx_count_distinct``).
 HLL++ at rsd 0.02 keeps its 4,096 registers as ~410 ``long`` fields of
 aggregation buffer per column, a fixed ~1 s of executor CPU per profile
 whatever the input size; the sketch is one binary buffer per column.
+
+Each pass is built as SQL expression strings handed to one
+``selectExpr``: column names are backtick-quoted (embedded backticks
+doubled) and regex literals are escaped for Spark's string-literal
+unescaping. Building the same aggregate from ``Column`` functions costs
+one py4j round trip per expression node, ~26,000 for 120 columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from self_healing_data_pipeline_spark.plans.catalog import (
     ColumnAnalysis,
@@ -35,6 +40,8 @@ HLL_LG_K = 13
 
 # Input types ``hll_sketch_agg`` accepts as they are; others are cast to string.
 _HLL_TYPES = ("int", "bigint", "string", "binary")
+
+_NUMERIC_TYPES = ("double", "float", "bigint", "int", "smallint", "tinyint")
 
 # Regexes for string-typed columns: can the column be promoted?
 _INT_RE = r"^\s*[+-]?\d+\s*$"
@@ -51,7 +58,23 @@ _SEMANTIC_PATTERNS = {
 }
 
 
-def _distinct_estimate(col, kind: str):
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str_lit(text: str) -> str:
+    """``text`` as a SQL string literal (Spark unescapes backslashes)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _double_lit(x: float) -> str:
+    """``x`` as an exact SQL double: ``repr`` round-trips, and the cast
+    also reads ``inf`` and ``nan``."""
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _distinct_estimate(col: str, kind: str) -> str:
     """Approximate distinct non-null count of one column.
 
     The sketch is passed through ``hll_union`` with itself before the
@@ -62,9 +85,17 @@ def _distinct_estimate(col, kind: str):
     HLL++ (so are empty strings and binaries, which DataSketches ignores).
     """
     if kind not in _HLL_TYPES:
-        col = col.cast("string")
-    sketch = F.hll_sketch_agg(col, HLL_LG_K)
-    return F.hll_sketch_estimate(F.hll_union(sketch, sketch))
+        col = f"CAST({col} AS STRING)"
+    sketch = f"hll_sketch_agg({col}, {HLL_LG_K})"
+    return f"hll_sketch_estimate(hll_union({sketch}, {sketch}))"
+
+
+def _count_if(pred: str) -> str:
+    return f"sum(CAST({pred} AS BIGINT))"
+
+
+def _named(expr: str, alias: str) -> str:
+    return f"{expr} AS {_ident(alias)}"
 
 
 def first_pass_aggregate(df: DataFrame) -> DataFrame:
@@ -78,38 +109,34 @@ def first_pass_aggregate(df: DataFrame) -> DataFrame:
     one binary buffer field per column) rather than HLL++, whose ~410
     register fields per column cost a fixed ~1 s per profile; see
     :func:`_distinct_estimate` for why the estimate is partition-invariant.
+
+    Output names are ``__total`` and ``<measure>__<column>``.
     """
-    aggs = [F.count(F.lit(1)).alias("__total")]
+    aggs = ["count(1) AS __total"]
     for f_ in df.schema.fields:
-        c, kind = f_.name, f_.dataType.simpleString()
-        col = F.col(c)
-        aggs.append(F.sum(col.isNull().cast("bigint")).alias(f"nulls__{c}"))
-        aggs.append(_distinct_estimate(col, kind).alias(f"card__{c}"))
+        name, kind = f_.name, f_.dataType.simpleString()
+        c = _ident(name)
+        aggs.append(_named(_count_if(f"{c} IS NULL"), f"nulls__{name}"))
+        aggs.append(_named(_distinct_estimate(c, kind), f"card__{name}"))
         if kind == "string":
-            s = F.when(col.isNotNull(), col)
             for tag, rx in (
                 ("int", _INT_RE),
                 ("real", _REAL_RE),
                 ("bool", _BOOL_RE),
                 ("date", _DATE_RE),
                 ("ts", _TS_RE),
+                *((f"sem_{sem}", rx) for sem, rx in _SEMANTIC_PATTERNS.items()),
             ):
                 aggs.append(
-                    F.sum(s.rlike(rx).cast("bigint")).alias(f"{tag}__{c}")
+                    _named(_count_if(f"{c} RLIKE {_str_lit(rx)}"), f"{tag}__{name}")
                 )
-            for sem, rx in _SEMANTIC_PATTERNS.items():
-                aggs.append(
-                    F.sum(s.rlike(rx).cast("bigint")).alias(f"sem_{sem}__{c}")
-                )
-            aggs.append(F.sum(F.lit(0)).alias(f"out__{c}"))
-        elif kind in ("double", "float", "bigint", "int", "smallint", "tinyint"):
-            mean = F.avg(col)
-            std = F.stddev_samp(col)
-            aggs.append(mean.alias(f"mean__{c}"))
-            aggs.append(std.alias(f"std__{c}"))
+            aggs.append(_named("sum(0)", f"out__{name}"))
+        elif kind in _NUMERIC_TYPES:
+            aggs.append(_named(f"avg({c})", f"mean__{name}"))
+            aggs.append(_named(f"stddev_samp({c})", f"std__{name}"))
         else:
-            aggs.append(F.sum(F.lit(0)).alias(f"out__{c}"))
-    return df.agg(*aggs)
+            aggs.append(_named("sum(0)", f"out__{name}"))
+    return df.selectExpr(*aggs)
 
 
 def profile_dataframe(
@@ -130,17 +157,15 @@ def profile_dataframe(
     out_aggs = []
     for f_ in df.schema.fields:
         c, kind = f_.name, f_.dataType.simpleString()
-        if kind in ("double", "float", "bigint", "int", "smallint", "tinyint"):
+        if kind in _NUMERIC_TYPES:
             mean, std = row.get(f"mean__{c}"), row.get(f"std__{c}")
             if mean is not None and std:
                 lo, hi = mean - outlier_sigma * std, mean + outlier_sigma * std
-                out_aggs.append(
-                    F.sum(((F.col(c) < lo) | (F.col(c) > hi)).cast("bigint")).alias(
-                        f"out__{c}"
-                    )
-                )
+                col = _ident(c)
+                outside = f"{col} < {_double_lit(lo)} OR {col} > {_double_lit(hi)}"
+                out_aggs.append(_named(_count_if(outside), f"out__{c}"))
     if out_aggs:
-        row.update(df.agg(*out_aggs).collect()[0].asDict())
+        row.update(df.selectExpr(*out_aggs).collect()[0].asDict())
 
     columns = []
     for f_ in df.schema.fields:

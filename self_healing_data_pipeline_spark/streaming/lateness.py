@@ -10,7 +10,8 @@ continuously, instead of re-auditing history in batch. Counts are
 exactly the batch audit's when batches arrive in ingest (event_id)
 order — the same per-key in-order delivery contract as
 ``streaming_ema`` and CDC's seq discipline, asserted bit-equal in
-``tests/test_lateness_stream.py``."""
+``tests/test_lateness_stream.py``. Like ``streaming/stateful.py`` it sets
+no state timeout, so an ``availableNow`` drain ends."""
 
 from __future__ import annotations
 
@@ -43,9 +44,6 @@ _OUTPUT_SCHEMA = T.StructType(
 def _update_lateness(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
     max_seen, n, d1, d5, d15 = (
         state.get if state.exists else (-1, 0, 0, 0, 0)
     )
@@ -75,7 +73,6 @@ def _update_lateness(
             drops[d] += int((late > d * 60000000).sum())
         max_seen = max(max_seen, int(us.max()))
     state.update((max_seen, n, drops[1], drops[5], drops[15]))
-    state.setTimeoutDuration(3600 * 1000)
     yield pd.DataFrame(
         {
             "event_type": [key[0]],
@@ -105,5 +102,5 @@ def streaming_lateness(events: DataFrame) -> DataFrame:
         outputStructType=_OUTPUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -4,9 +4,14 @@ streaming aggregates can't express).
 
 ``running_user_stats`` keeps per-key running (count, sum, max) across
 micro-batches and emits one updated row per key per batch — the canonical
-"custom accumulator with timeout" shape. State is a fixed-width tuple per
-key: memory is O(|keys|), evicted via processing-time timeout, so the
-operator is stable on unbounded streams.
+"custom accumulator" shape. State is a fixed-width tuple per key, so
+memory is O(|keys|) on an unbounded stream.
+
+Neither operator sets a state timeout. A key's state is its full-history
+total, which is what the batch twins compute; evicting an idle key would
+restart its count from zero. A processing-time timeout also makes Spark
+run a no-data micro-batch on every trigger to look for expired keys, so
+a ``trigger(availableNow=True)`` drain never ends.
 """
 
 from __future__ import annotations
@@ -32,9 +37,6 @@ OUTPUT_SCHEMA = T.StructType(
 def _update_user_stats(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
     count, total, max_val = (
         state.get if state.exists else (0, 0.0, float("-inf"))
     )
@@ -44,7 +46,6 @@ def _update_user_stats(
         if len(pdf):
             max_val = max(max_val, float(pdf["value"].max()))
     state.update((count, total, max_val))
-    state.setTimeoutDuration(3600 * 1000)  # evict idle keys after 1h
     yield pd.DataFrame(
         {
             "user_id": [key[0]],
@@ -67,7 +68,7 @@ def running_user_stats(events: DataFrame, key: str = "user_id") -> DataFrame:
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -92,9 +93,6 @@ def _update_ema(
     batch twin (queries/analytics2.q_ema) and its DuckDB recursive-CTE
     oracle, so a stream that delivers batches in event-time order
     reproduces the batch result bit-for-bit."""
-    if state.hasTimedOut:
-        state.remove()
-        return
     ema, n, last = state.get if state.exists else (None, 0, None)
     chunks = [pdf for pdf in pdfs if len(pdf)]
     rows = (
@@ -108,7 +106,6 @@ def _update_ema(
         last = x
         n += 1
     state.update((ema, n, last))
-    state.setTimeoutDuration(3600 * 1000)
     yield pd.DataFrame(
         {
             "user_id": [key[0]],
@@ -124,8 +121,8 @@ def streaming_ema(events: DataFrame, key: str = "user_id") -> DataFrame:
     average maintained across micro-batches via applyInPandasWithState.
 
     State per key is THREE scalars (ema, count, last) — O(|keys|)
-    memory on an unbounded stream, idle keys evicted by timeout. Rows
-    are folded in (ts, event_id) order WITHIN each batch; like every
+    memory on an unbounded stream. Rows are folded in (ts, event_id)
+    order WITHIN each batch; like every
     sequential recurrence, cross-batch correctness requires the source
     to deliver batches in non-decreasing event time per key (file
     sources replaying history in file order, or a log keyed+ordered per
@@ -141,5 +138,5 @@ def streaming_ema(events: DataFrame, key: str = "user_id") -> DataFrame:
         outputStructType=EMA_OUTPUT_SCHEMA,
         stateStructType=EMA_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -49,7 +49,7 @@ def test_streaming_lateness_matches_batch_audit(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream drain timed out"
     rows = spark.sql(
         "SELECT * FROM t_late ORDER BY event_type"
     ).collect()
@@ -93,16 +93,12 @@ def test_update_fold_is_chunk_order_invariant():
 
     class _FakeState:
         exists = False
-        hasTimedOut = False
 
         def __init__(self):
             self.stored = None
 
         def update(self, v):
             self.stored = v
-
-        def setTimeoutDuration(self, ms):
-            pass
 
     # event_ids 1..6 in ingest order; event 4 arrives 10 min late
     # (prev max 7200s vs its own 6600s -> dropped at 1m and 5m).

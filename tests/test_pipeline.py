@@ -151,3 +151,74 @@ def test_review_gate_approve_with_edit_flows_value(spark):
     assert result.ok
     assert result.value == "SELECT 1 -- REVIEWED"
     assert any("approved with edits" in l.message for l in result.logs)
+
+
+def test_ingest_parses_the_file_once(spark, tmp_path):
+    """The Upload stage materializes the parse: a file deleted after
+    profiling (at the schema review) still loads, reads back and scans
+    with every row, so nothing after Upload reads the file again."""
+    p = tmp_path / "gone.csv"
+    p.write_text("id,v\n" + "".join(f"{i},{i * 0.5}\n" for i in range(50)))
+
+    def delete_then_approve(_state):
+        p.unlink()
+        return True
+
+    result = ingest_file_pipeline(spark, str(p), schema_approver=delete_then_approve)
+    assert result.ok, [l.message for l in result.logs]
+    assert not p.exists()
+    assert not any(l.severity == "warning" for l in result.logs)  # read-back ok
+    assert spark.table("gone").count() == 50
+
+
+def _rows(spark, table: str) -> list[tuple]:
+    return sorted(tuple(r) for r in spark.table(table).collect())
+
+
+def test_ingest_loads_a_snapshot_of_a_rewritten_file(spark, tmp_path):
+    """Re-ingesting a file rewritten in place loads its new rows, under
+    the same table name and under a new one, while a table loaded from
+    the old contents keeps them (a path-matched cache would serve the
+    old rows to the re-ingest)."""
+    p = tmp_path / "snap.csv"
+    p.write_text("k,v\n1,a\n2,b\n")
+    assert ingest_file_pipeline(spark, str(p)).ok
+    p.write_text("k,v\n10,x\n20,y\n30,z\n")
+    assert ingest_file_pipeline(spark, str(p), table_name="snap_new").ok
+    assert _rows(spark, "snap_new") == [(10, "x"), (20, "y"), (30, "z")]
+    assert _rows(spark, "snap") == [(1, "a"), (2, "b")]
+    assert ingest_file_pipeline(spark, str(p)).ok
+    assert _rows(spark, "snap") == [(10, "x"), (20, "y"), (30, "z")]
+
+
+def _stored_rdd_ids(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_reingest_keeps_one_stored_upload_per_table(spark, tmp_path):
+    """Ten re-ingests of one path, plus a rejected upload, leave exactly
+    one stored RDD: the live table's. A rejected upload releases its
+    blocks at once; a replaced upload's blocks go once the JVM collects
+    them (Spark's ContextCleaner)."""
+    import gc
+    import time
+
+    p = tmp_path / "again.csv"
+    p.write_text("a,b\n1,2\n3,4\n")
+    empty = tmp_path / "again_empty.csv"
+    empty.write_text("a,b\n")
+    before = _stored_rdd_ids(spark)
+    assert not ingest_file_pipeline(spark, str(empty)).ok
+    assert _stored_rdd_ids(spark) - before == set()
+    for _ in range(10):
+        assert ingest_file_pipeline(spark, str(p)).ok
+    live = spark.table("again")._jdf.queryExecution().analyzed().collectLeaves()
+    live_id = live.head().rdd().id()
+    jvm = spark.sparkContext._jvm
+    deadline = time.monotonic() + 60
+    while _stored_rdd_ids(spark) - before != {live_id} and time.monotonic() < deadline:
+        gc.collect()
+        jvm.java.lang.System.gc()
+        time.sleep(0.5)
+    assert _stored_rdd_ids(spark) - before == {live_id}
+    assert spark.table("again").count() == 2

@@ -175,3 +175,83 @@ def test_profile_other_column_types(spark):
     assert set(_card(first_pass_aggregate(df)).values()) == {2}
     profile = profile_dataframe(df)
     assert [c.column_name for c in profile.columns] == df.columns
+
+
+def test_profile_quoted_names_and_values(spark):
+    """Measures are SQL expression strings: column names with a space, a
+    backtick, a dot and quotes are quoted identifiers, and values holding
+    ``'`` or ``\\`` are data, never SQL text. The INTEGER and DATE
+    promotions only hold if the ``\\d``/``\\s`` regex literals survive
+    the SQL string escaping. (``F.col`` rejects ``a`b`` and reads ``x.y``
+    as a struct field.)"""
+    df = spark.createDataFrame(
+        [
+            ("O'Brien", "1", 1.5, "a@b.co", 10, "2024-01-01"),
+            ("back\\slash", "22", 2.5, "o'neil@x.org", 20, "2024-02-29"),
+            (None, " 3 ", 3.5, "it's\\mail@y.net", 30, None),
+        ],
+        "`first name` string, `a``b` string, `x.y` double, `it's` string,"
+        " `say \"hi\"` bigint, `d\\d` string",
+    )
+    profile = profile_dataframe(df, "quoted")
+    assert profile == TableSchema(
+        "quoted",
+        [
+            ColumnAnalysis(
+                "first name", "TEXT", "unknown", "string column, 2/3 non-null",
+                ["Contains null values"], "string",
+            ),
+            ColumnAnalysis("a`b", "INTEGER", "unknown", "string column, 3/3 non-null",
+                           [], "string"),
+            ColumnAnalysis("x.y", "REAL", "unknown", "double column, 3/3 non-null",
+                           [], "double"),
+            ColumnAnalysis("it's", "TEXT", "email", "string column, 3/3 non-null",
+                           [], "string"),
+            ColumnAnalysis('say "hi"', "INTEGER", "unknown",
+                           "bigint column, 3/3 non-null", [], "bigint"),
+            # dates also fit the phone pattern (digits and dashes)
+            ColumnAnalysis("d\\d", "DATE", "phone", "string column, 2/3 non-null",
+                           ["Contains null values"], "string"),
+        ],
+    )
+    row = first_pass_aggregate(df).collect()[0].asDict()
+    assert row["card__first name"] == 2 and row["card__a`b"] == 3
+    assert row["mean__x.y"] == 2.5 and row["sem_email__it's"] == 3
+
+
+def _py4j_calls(fn) -> int:
+    """py4j commands ``fn`` sends, counted as the benchmark's tracer counts
+    them: every command except the releases of collected proxies, which
+    follow Python's GC timing."""
+    import py4j.clientserver
+    import py4j.protocol
+
+    conn = py4j.clientserver.ClientServerConnection
+    send, calls = conn.send_command, [0]
+
+    def counting_send(self, command, *a, **kw):
+        if not command.startswith(py4j.protocol.MEMORY_COMMAND_NAME):
+            calls[0] += 1
+        return send(self, command, *a, **kw)
+
+    conn.send_command = counting_send
+    try:
+        fn()
+    finally:
+        conn.send_command = send
+    return calls[0]
+
+
+def test_first_pass_build_py4j_bound(spark):
+    """Building the 120-column aggregate is one ``selectExpr`` call: about
+    one round trip per measure (801 here, for the list conversion) plus
+    a constant. Building it node by node with Column functions took
+    26,353 round trips."""
+    cols = []
+    for i in range(40):
+        cols.append(f"CAST(id + {i} AS STRING) AS s{i}")
+        cols.append(f"CAST(id * 1.5 + {i} AS DOUBLE) AS d{i}")
+        cols.append(f"id + {i} AS l{i}")
+    df = spark.range(100).selectExpr(*cols)
+    df.schema  # resolved once, outside the count
+    assert _py4j_calls(lambda: first_pass_aggregate(df)) <= 1000

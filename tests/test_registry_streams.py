@@ -249,13 +249,21 @@ def test_session_window_stream_equals_batch_lag_cumsum(spark, tmp_path):
 
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
     horizon = max_ts - datetime.timedelta(seconds=gap_s)
+    batch_rows = batch.collect()
+    # precondition: no session ends exactly at the final watermark minus
+    # the gap, where the batch side's `<=` and append-mode emission could
+    # disagree (the same kind of boundary as the exact-gap tie above)
+    assert all(r["s_end"] != horizon for r in batch_rows), (
+        "fixture hit the watermark-close boundary"
+    )
     want = {
         (r["user_id"], str(r["s_start"]), str(r["s_end"]), r["n_events"])
-        for r in batch.collect()
+        for r in batch_rows
         if r["s_end"] <= horizon
     }
 
-    # streaming side: two time-ordered source files -> one epoch each
+    # streaming side: the events split at the event_id median into two
+    # source files -> one epoch each
     src = tmp_path / "events_src"
     mid = ev.approxQuantile("event_id", [0.5], 0.0)[0]
     ev.where(F.col("event_id") <= mid).coalesce(1).write.parquet(

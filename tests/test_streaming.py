@@ -70,7 +70,7 @@ def test_stateful_running_stats_matches_batch(spark, events_stream_path, sf_dir)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream drain timed out"
     # last update per key == full-history aggregate
     got = {
         r["user_id"]: (r["n_events"], round(r["total_value"], 6))
@@ -395,7 +395,7 @@ def test_streaming_ema_matches_batch_twin(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream drain timed out"
     got = {
         r["user_id"]: (r["n_events"], r["ema_last"], r["last_value"])
         for r in spark.sql(
