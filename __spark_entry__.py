@@ -193,22 +193,16 @@ _CHANGED_SINCE_VERDICT = (
     # untouched; all re-verified hash-green at sf0.01 this round).
     "q_agg_unpivot",
     "q_cast",
-    "q_dedup_clusters",
     "q_events_anomaly",
     "q_explode_outer",
     "q_filter_pred",
     "q_groupwise_argmax",
-    "q_join_bucketed",
     "q_label_balance",
     "q_oov_rate",
     "q_profile_histogram",
     "q_project",
     "q_rowcount",
-    "q_scan_csv",
-    "q_scan_json",
-    "q_scan_orc",
     "q_scan_parquet",
-    "q_scan_partition_pruned",
     "q_skew_salted_agg",
     "q_skew_salted_join",
     "q_stratified_cap",
@@ -245,6 +239,258 @@ _CHANGED_SINCE_VERDICT = (
     "q_rollup_partials",
     "q_text_tfidf_top",
     "q_time_weighted_avg",
+    # ---- Query modules regrouped by domain (move-only: every other
+    # callable and oracle is byte-identical). Real edits first: the
+    # round-trip scan keys now write under session.scratch_dir (and
+    # q_scan_partition_pruned under session.SCRATCH_ROOT) instead of
+    # shared .scratch paths, re-verified at sf0.001/0.01/0.1; then the
+    # two keys whose local import named a deleted module.
+    "q_scan_csv",
+    "q_scan_json",
+    "q_scan_orc",
+    "q_join_bucketed",
+    "q_csv_dialect",
+    "q_scan_partition_pruned",
+    "q_dedup_clusters",
+    "q_window_groups_exclude",
+    # Module/deps co-flags of the regroup: the dq.py keys first (their
+    # closure reaches plans/catalog.py, whose DDL now doubles quotes in
+    # names), then every other key by module.
+    "q_profile_nulls",
+    "q_profile_stats",
+    "q_profile_median",
+    "q_profile_catalog",
+    "q_profile_quartiles",
+    "q_profile_topk_values",
+    "q_table_diff",
+    "q_k_anonymity",
+    "q_impute_missing",
+    "q_winsorize",
+    "q_ks_drift",
+    "q_ledger_reconciliation",
+    "q_scd2_integrity",
+    "q_double_payment",
+    "q_table_checksum",
+    "q_lineage_downstream",
+    "q_join_discovery",
+    "q_join_discovery_sketch",
+    "q_gdpr_erasure",
+    "q_histogram_equidepth",
+    "q_join_size_estimate",
+    "q_compaction_bins",
+    "q_zone_map_prune",
+    "q_retention_sweep",
+    "q_encoding_advisor",
+    "q_sort_key_whatif",
+    "q_clustering_depth",
+    "q_selectivity_audit",
+    "q_catalog_graph",
+    "q_catalog_graph_impact",
+    "q_retention_plan",
+    "q_bucket_advisor",
+    "q_sample_hash",
+    "q_split_assign",
+    "q_doc_chunks",
+    "q_contamination",
+    "q_corpus_build",
+    "q_shard_assign",
+    "q_quality_funnel",
+    "q_pack_context",
+    "q_domain_mixture",
+    "q_split_leakage",
+    "q_split_temporal",
+    "q_sample_temperature",
+    "q_sample_bias_audit",
+    "q_dataset_card",
+    "q_filter_cascade",
+    "q_token_budget",
+    "q_dedup_keep_first",
+    "q_dedup_normalized",
+    "q_dedup_keep_first_docs",
+    "q_dedup_pairs",
+    "q_dedup_minhash",
+    "q_dedup_embedding",
+    "q_dedup_simhash",
+    "q_dedup_simhash_pairs",
+    "q_dedup_ngram_verify",
+    "q_fuzzy_match",
+    "q_dedup_incremental",
+    "q_dedup_keep_best",
+    "q_dedup_substring",
+    "q_dedup_cluster_sizes",
+    "q_entity_resolution",
+    "q_dedup_explain",
+    "q_embedding_dedup_bitexact",
+    "q_stream_tumbling",
+    "q_stream_sliding",
+    "q_stream_session",
+    "q_stream_late_data",
+    "q_stream_interval_join",
+    "q_events_funnel",
+    "q_events_retention",
+    "q_events_markov",
+    "q_events_stickiness",
+    "q_sessionize",
+    "q_attribution_linear",
+    "q_events_heatmap",
+    "q_ohlc_bars",
+    "q_rolling_active_users",
+    "q_type_user_overlap",
+    "q_events_burst_minutes",
+    "q_sessionize_twophase",
+    "q_autocorrelation",
+    "q_mann_kendall",
+    "q_ols_trend",
+    "q_degree_distribution",
+    "q_multimodal_features",
+    "q_multimodal_audio",
+    "q_multimodal_video",
+    "q_image_dhash",
+    "q_media_dedup",
+    "q_orders_backlog",
+    "q_orders_aging",
+    "q_ship_sla",
+    "q_inventory_floor",
+    "q_pareto_8020",
+    "q_growth_accounting",
+    "q_bullwhip",
+    "q_sim_topk",
+    "q_sim_ann_lsh",
+    "q_sim_join_lsh",
+    "q_sim_ivf",
+    "q_sim_join",
+    "q_sim_range",
+    "q_ann_recall_at_k",
+    "q_ann_ivfadc",
+    "q_ann_two_stage",
+    "q_ann_mrl_ablation",
+    "q_agg_groupby",
+    "q_agg_distinct",
+    "q_agg_approx_distinct",
+    "q_agg_rollup",
+    "q_agg_having",
+    "q_agg_pivot",
+    "q_agg_approx_percentile",
+    "q_window_rank",
+    "q_window_lag",
+    "q_window_frame",
+    "q_window_running",
+    "q_window_range_frame",
+    "q_window_first_last",
+    "q_agg_cube",
+    "q_agg_listagg",
+    "q_distinct_rows",
+    "q_window_distribution",
+    "q_agg_filtered",
+    "q_agg_grouping_sets",
+    "q_agg_corr",
+    "q_agg_bool",
+    "q_percentile_cont",
+    "q_share_of_parent",
+    "q_window_nth",
+    "q_agg_mode",
+    "q_window_cume_dist",
+    "q_window_ntile",
+    "q_pivot_multi_agg",
+    "q_grouping_id",
+    "q_window_ignore_nulls",
+    "q_histogram_bins",
+    "q_window_qualify",
+    "q_distinct_on",
+    "q_agg_filter",
+    "q_string_agg",
+    "q_percentile_within_group",
+    "q_window_exclude",
+    "q_window_groups_mode",
+    "q_window_agg_filter",
+    "q_window_range_interval",
+    "q_join_range",
+    "q_join_cross",
+    "q_subquery_scalar",
+    "q_join_multiway",
+    "q_subquery_correlated",
+    "q_ingest_quarantine",
+    "q_merge_upsert",
+    "q_scd2_versions",
+    "q_schema_evolution",
+    "q_join_pit",
+    "q_generate_synthetic",
+    "q_join_asof_nearest",
+    "q_bitemporal",
+    "q_partition_advisor",
+    "q_join_fanout_audit",
+    "q_set_intersect_all",
+    "q_set_except_all",
+    "q_join_null_safe",
+    "q_join_lateral",
+    "q_tablesample_stable",
+    "q_string_funcs",
+    "q_date_funcs",
+    "q_math_funcs",
+    "q_array_funcs",
+    "q_array_explode",
+    "q_json_funcs",
+    "q_conditional",
+    "q_regexp_funcs",
+    "q_pandas_udf",
+    "q_sql_passthrough",
+    "q_map_funcs",
+    "q_date_series",
+    "q_udf_grouped_agg",
+    "q_udf_grouped_map",
+    "q_udtf_sentences",
+    "q_null_semantics",
+    "q_business_days",
+    "q_explode_pos",
+    "q_unnest_ordinality",
+    "q_split_part",
+    "q_ilike_similar",
+    "q_distinct_sketch_accuracy",
+    "q_survival_km",
+    "q_feature_scale",
+    "q_ab_test",
+    "q_class_weights",
+    "q_corr_matrix",
+    "q_value_percentile",
+    "q_feature_screen",
+    "q_watermark_audit",
+    "q_text_tokens",
+    "q_text_rollup",
+    "q_text_token_count",
+    "q_text_fingerprint",
+    "q_text_langid",
+    "q_text_quality",
+    "q_pii_scan",
+    "q_text_repetition",
+    "q_text_docfreq",
+    "q_text_stopword_ratio",
+    "q_text_zipf",
+    "q_text_token_bpe",
+    "q_text_token_bpe_exact",
+    "q_text_bigram_coherence",
+    "q_text_readability",
+    "q_phrase_search",
+    "q_posting_gaps",
+    "q_term_collocations",
+    "q_pii_redact",
+    "q_langid_confusion",
+    "q_text_bm25",
+    "q_rrf_fusion",
+    "q_text_keyphrase",
+    "q_trending_terms",
+    "q_assoc_pmi",
+    "q_vocab_growth",
+    "q_tokenizer_fertility",
+    "q_stopword_discovery",
+    "q_text_hashing_features",
+    "q_doc_compression_ratio",
+    "q_pii_redact_injected",
+    "q_embed_centroids",
+    "q_kmeans_assign",
+    "q_embedding_pq",
+    "q_embedding_norm_audit",
+    "q_embedding_covariance",
+    "q_embedding_pca",
 )
 
 

@@ -1,7 +1,7 @@
 """Corpus filter-cascade gates — THE single home of the five standard
 intake filters (length band, langid confidence, alpha ratio,
 mean-word-length band, exact dedup) shared by the batch funnel report
-(``queries/extras74.q_filter_cascade``) and its streaming twin
+(``queries/corpus.q_filter_cascade``) and its streaming twin
 (``streaming/cascade.py``), so gate constants and verdict arithmetic
 cannot drift between the two.
 

@@ -2,7 +2,7 @@
 100 TB path for join-relationship discovery (reference `README.md:21`,
 the "discover relationships between datasets" promise; SCALE.md names
 sketch containment as the scale path verified by the exact form in
-`queries.catalog_queries.q_join_discovery`).
+`queries.catalog.q_join_discovery`).
 
 A column's KMV sketch is the k smallest ``xxhash64`` values of its
 distinct values. For two sketches with thresholds (kth-minimum) θ_A and

@@ -278,7 +278,10 @@ def ingest_file_pipeline(
         struct_to_ddl,
     )
     from self_healing_data_pipeline_spark.plans.lineage import LineageLog
-    from self_healing_data_pipeline_spark.plans.profiler import profile_dataframe
+    from self_healing_data_pipeline_spark.plans.profiler import (
+        _ident,
+        profile_dataframe,
+    )
     from self_healing_data_pipeline_spark.sources.readers import read_any
 
     import os
@@ -310,8 +313,12 @@ def ingest_file_pipeline(
         # DDL validation gate (geminiService.ts:138-140).
         if not ddl.upper().startswith("CREATE TABLE"):
             raise ValueError("generated DDL failed CREATE TABLE gate")
-        casted = df.select(
-            *[df[f.name].cast(f.dataType).alias(f.name) for f in struct.fields]
+        casted = df.selectExpr(
+            *[
+                f"CAST({_ident(f.name)} AS {f.dataType.simpleString()})"
+                f" AS {_ident(f.name)}"
+                for f in struct.fields
+            ]
         )
         lineage.record(
             "GeneratingSql", [f"{name}:raw", f"{name}:profile"], f"{name}:frozen",

@@ -90,7 +90,12 @@ def struct_to_ddl(table_name: str, struct: T.StructType) -> str:
     """Render CREATE TABLE DDL from a StructType — the reviewable artifact
     the reference shows its human gate (App.tsx:246-254)."""
     cols = ",\n  ".join(
-        f'"{f.name}" {sql_type_of(f.dataType.simpleString())}'
+        f"{_quoted(f.name)} {sql_type_of(f.dataType.simpleString())}"
         for f in struct.fields
     )
-    return f'CREATE TABLE "{table_name}" (\n  {cols}\n);'
+    return f"CREATE TABLE {_quoted(table_name)} (\n  {cols}\n);"
+
+
+def _quoted(name: str) -> str:
+    """``name`` as a double-quoted SQL identifier."""
+    return '"' + name.replace('"', '""') + '"'

@@ -15,6 +15,8 @@ Determinism rules applied throughout (SURVEY.md §7 "what's hard"):
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,115 +54,9 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# Imported for side effects: each module registers its queries.
 def load_all() -> None:
-    from self_healing_data_pipeline_spark.queries import (  # noqa: F401
-        core,
-        relational,
-        aggregates,
-        scalars,
-        windows,
-        events,
-        tier_c,
-        extras,
-        extras2,
-        extras3,
-        extras4,
-        ingest_queries,
-        llm_ops,
-        udf_surface,
-        tpch,
-        tpch2,
-        analytics,
-        catalog_queries,
-        corpus_ops,
-        extras5,
-        dq,
-        analytics2,
-        extras6,
-        extras7,
-        extras8,
-        extras9,
-        extras10,
-        extras11,
-        extras12,
-        extras13,
-        extras14,
-        extras15,
-        extras16,
-        extras17,
-        extras18,
-        extras19,
-        extras20,
-        extras21,
-        extras22,
-        extras23,
-        extras24,
-        extras25,
-        extras26,
-        extras27,
-        extras28,
-        extras29,
-        extras30,
-        extras31,
-        extras32,
-        extras33,
-        extras34,
-        extras35,
-        extras36,
-        extras37,
-        extras38,
-        extras39,
-        extras40,
-        extras41,
-        extras42,
-        extras43,
-        extras44,
-        extras45,
-        extras46,
-        extras47,
-        extras48,
-        extras49,
-        extras50,
-        extras51,
-        extras52,
-        extras53,
-        extras54,
-        extras55,
-        extras56,
-        extras57,
-        extras58,
-        extras59,
-        extras60,
-        extras61,
-        extras62,
-        extras63,
-        extras64,
-        extras65,
-        extras66,
-        extras67,
-        extras68,
-        extras69,
-        extras70,
-        extras71,
-        extras72,
-        extras73,
-        extras74,
-        extras75,
-        extras76,
-        extras77,
-        extras78,
-        extras79,
-        extras80,
-        extras81,
-        extras82,
-        extras83,
-        extras84,
-        extras85,
-        extras86,
-        extras87,
-        extras88,
-        extras89,
-        extras90,
-        extras91,
-    )
+    """Import every module under ``queries/``; each registers its keys."""
+    from self_healing_data_pipeline_spark import queries
+
+    for mod in pkgutil.iter_modules(queries.__path__):
+        importlib.import_module(f"{queries.__name__}.{mod.name}")

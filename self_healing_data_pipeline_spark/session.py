@@ -19,6 +19,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: Repo-root ``.scratch``: the one place query scratch paths hang from.
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 
 def get_spark(
     app_name: str = "self_healing_data_pipeline_spark",
@@ -84,14 +89,8 @@ def scratch_path(tag: str, sf_dir: str) -> str:
     sweeping siblings — for code (tests, inspectors) that needs to look
     at a scratch directory some query already built. Single source of
     the naming scheme: ``.scratch/<tag>_<sf-basename>_pid<pid>``."""
-    import os
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scratch",
-    )
     return os.path.join(
-        root,
+        SCRATCH_ROOT,
         f"{tag}_{os.path.basename(os.path.normpath(sf_dir))}_pid{os.getpid()}",
     )
 
@@ -111,17 +110,12 @@ def scratch_dir(tag: str, sf_dir: str) -> str:
     live concurrent drivers are untouched (their pids probe alive, or
     probe ``PermissionError`` for other-user processes, which counts
     as alive)."""
-    import os
     import re
     import shutil
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scratch",
-    )
     me = os.getpid()
     try:
-        siblings = os.listdir(root)
+        siblings = os.listdir(SCRATCH_ROOT)
     except OSError:
         siblings = []
     for name in siblings:
@@ -131,7 +125,7 @@ def scratch_dir(tag: str, sf_dir: str) -> str:
         try:
             os.kill(int(m.group(1)), 0)
         except ProcessLookupError:
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+            shutil.rmtree(os.path.join(SCRATCH_ROOT, name), ignore_errors=True)
         except PermissionError:
             pass  # alive, owned by someone else
     d = scratch_path(tag, sf_dir)

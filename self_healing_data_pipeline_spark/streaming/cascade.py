@@ -1,5 +1,5 @@
 """Streaming corpus-intake FUNNEL: the continuous twin of
-q_filter_cascade (``queries/extras74.py``) — documents arrive forever,
+q_filter_cascade (``queries/corpus.py``) — documents arrive forever,
 the five-stage filter cascade runs per micro-batch, and the funnel
 report (per-stage n_in / n_dropped / n_out) stays current across all
 history without ever rescanning it.

@@ -1,5 +1,5 @@
 """True-streaming LATENESS MONITOR — the continuous twin of
-q_watermark_audit (`queries/extras29.py`): per event type, maintain the
+q_watermark_audit (`queries/streams.py`): per event type, maintain the
 max event-time seen so far and count, for each candidate watermark
 delay, the events that would have been dropped — across micro-batches,
 with O(|types|) fixed-width state.

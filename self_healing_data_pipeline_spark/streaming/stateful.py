@@ -90,7 +90,7 @@ def _update_ema(
     """Fold this batch's rows (event-time order) into the running EMA.
 
     The recurrence is the SAME two-multiply-one-add expression as the
-    batch twin (queries/analytics2.q_ema) and its DuckDB recursive-CTE
+    batch twin (queries/forecast.q_ema) and its DuckDB recursive-CTE
     oracle, so a stream that delivers batches in event-time order
     reproduces the batch result bit-for-bit."""
     ema, n, last = state.get if state.exists else (None, 0, None)

@@ -145,7 +145,7 @@ def streaming_ohlc_bars(
     event_filter: str = "purchase",
 ) -> DataFrame:
     """Continuous OHLC CANDLES — the streaming twin of
-    ``queries/extras47.py::q_ohlc_bars``: per tumbling hour,
+    ``queries/events.py::q_ohlc_bars``: per tumbling hour,
     open/high/low/close/count/volume over purchase-event values, with
     open/close resolved by min/max over (ts, event_id, cents) structs
     — the SAME total-order aggregate as the batch query, so on-time

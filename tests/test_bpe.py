@@ -85,7 +85,7 @@ def test_vocab_cap_bounds_collect_and_preserves_merges(spark):
 
 
 def test_query_witness_exact_ge_estimate(spark, sf_dir):
-    from self_healing_data_pipeline_spark.queries.corpus_ops import (
+    from self_healing_data_pipeline_spark.queries.text import (
         q_text_token_bpe_exact,
     )
 

@@ -9,9 +9,7 @@ from __future__ import annotations
 
 import os
 
-from self_healing_data_pipeline_spark.queries.catalog_queries import (
-    _catalog_key,
-)
+from self_healing_data_pipeline_spark.queries.catalog import _catalog_key
 
 
 class _FakeSpark:

@@ -15,7 +15,7 @@ from __future__ import annotations
 import duckdb
 import numpy as np
 
-from self_healing_data_pipeline_spark.queries.extras20 import (
+from self_healing_data_pipeline_spark.queries.multimodal import (
     _NOISE_LAW,
     _PX_LAW,
 )

@@ -53,7 +53,7 @@ def test_groups_frame_hand_computed(spark):
     #   value 30 -> groups {20,30,40}: sum 150, rows 5
     #   value 40 -> groups {30,40}:    sum 130, rows 4
     # partition 'b', single value [5] -> frame is just its own group.
-    from self_healing_data_pipeline_spark.queries.extras88 import (
+    from self_healing_data_pipeline_spark.queries.sql_aggregates import (
         groups_frame_rewrite,
     )
 
@@ -91,7 +91,7 @@ def test_groups_exclude_hand_computed(spark):
     # current peer group -> {20,40} sums 60; EXCLUDE TIES drops peers
     # but keeps the row itself -> {30,20,40} sums 90. A single-group
     # partition ('b') has an EMPTY frame under EXCLUDE GROUP -> NULL.
-    from self_healing_data_pipeline_spark.queries.extras88 import (
+    from self_healing_data_pipeline_spark.queries.sql_aggregates import (
         groups_exclude_frame,
     )
 

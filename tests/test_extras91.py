@@ -14,12 +14,12 @@ import numpy as np
 import pandas as pd
 
 from self_healing_data_pipeline_spark import registry
-from self_healing_data_pipeline_spark.queries.extras91 import (
-    _RANGE_INTERVAL_SQL,
+from self_healing_data_pipeline_spark.queries.dedup import (
     _SEMDEDUP_MIN_K,
     _SEMDEDUP_TARGET_CLUSTER,
     _SEMDEDUP_TAU,
 )
+from self_healing_data_pipeline_spark.queries.sql_aggregates import _RANGE_INTERVAL_SQL
 
 registry.load_all()
 

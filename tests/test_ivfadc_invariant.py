@@ -7,7 +7,7 @@ of on every bench pass."""
 
 from __future__ import annotations
 
-from self_healing_data_pipeline_spark.queries.extras72 import (
+from self_healing_data_pipeline_spark.queries.similarity import (
     _PQ_INDEX_CACHE,
     _RECALL_FLOOR,
     ivfadc_per_probe,

@@ -33,8 +33,8 @@ def test_known_fixed_sites_still_capped():
     is capped and the neardup-registry set compare stays distributed
     (no collect at all in that function)."""
     sites = {s["key"] for s in lint_driver_bound.census()}
-    assert "queries/extras72.py::ivfadc_per_probe#0" in sites
+    assert "queries/similarity.py::ivfadc_per_probe#0" in sites
     assert not any("q_neardup_registry" in k for k in sites)
-    from self_healing_data_pipeline_spark.queries import extras72
+    from self_healing_data_pipeline_spark.queries import similarity
 
-    assert extras72._PANEL_CAP == 40
+    assert similarity._PANEL_CAP == 40

@@ -75,6 +75,27 @@ def test_ingest_file_pipeline_end_to_end(spark, tmp_path):
     assert kinds == {"id": "bigint", "name": "string", "score": "double"}
 
 
+def test_ingest_quotes_header_names(spark, tmp_path):
+    """Header cells are column names, not SQL: a dot, a space, a backtick
+    or a double quote in one must survive the freeze cast and the DDL."""
+    from self_healing_data_pipeline_spark.plans.catalog import struct_to_ddl
+
+    names = ["a.b", "c d", "`q`", 'x"y']
+    p = tmp_path / "odd_headers.csv"
+    p.write_text(",".join(names) + "\n1,ann,2.5,7\n2,bo,3.5,8\n")
+    result = ingest_file_pipeline(spark, str(p))
+    assert result.ok, [l.message for l in result.logs]
+    assert not any(l.severity == "warning" for l in result.logs)  # no retry
+    loaded = spark.table("odd_headers")
+    assert loaded.columns == names
+    assert sorted(tuple(r) for r in loaded.collect()) == [
+        (1, "ann", 2.5, 7),
+        (2, "bo", 3.5, 8),
+    ]
+    ddl = struct_to_ddl("odd_headers", loaded.schema)
+    assert '\n  "x""y" ' in ddl, ddl
+
+
 def test_ingest_records_lineage(spark, tmp_path):
     p = tmp_path / "lin.csv"
     p.write_text("a,b\n1,2\n3,4\n")

@@ -7,6 +7,10 @@ exact silent-shadow case the guard exists to catch. The fix compares
 (module, qualname).
 """
 
+import ast
+import glob
+import os
+
 import pytest
 
 from self_healing_data_pipeline_spark import registry
@@ -42,3 +46,28 @@ def test_cross_module_same_name_duplicate_raises():
     finally:
         registry.QUERIES.pop(key, None)
         registry.ORACLE.pop(key, None)
+
+
+def test_load_all_registers_every_declared_key():
+    """``load_all`` walks the ``queries`` package instead of listing its
+    modules, so a module the walk skipped would drop its keys silently.
+    Every ``@query("q_...")`` literal in ``queries/*.py`` must come out
+    registered, once, and nothing else may."""
+    qdir = os.path.join(os.path.dirname(registry.__file__), "queries")
+    declared = []
+    for path in sorted(glob.glob(os.path.join(qdir, "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for d in node.decorator_list:
+                if (
+                    isinstance(d, ast.Call)
+                    and getattr(d.func, "id", None) == "query"
+                    and isinstance(d.args[0], ast.Constant)
+                ):
+                    declared.append(d.args[0].value)
+    registry.load_all()
+    assert len(declared) == len(set(declared))
+    assert set(declared) == set(registry.QUERIES)

@@ -123,16 +123,7 @@ def test_scratch_dir_sweeps_dead_owner_siblings(tmp_path, monkeypatch):
     unsuffixed = root / "not_pid_keyed"
     unsuffixed.mkdir()
 
-    real_dirname = os.path.dirname
-
-    def fake_dirname(p):
-        # scratch_dir derives root as dirname(dirname(session.__file__));
-        # redirect only that outermost call to tmp_path
-        if p == real_dirname(os.path.abspath(S.__file__)):
-            return str(tmp_path)
-        return real_dirname(p)
-
-    monkeypatch.setattr(S.os.path, "dirname", fake_dirname)
+    monkeypatch.setattr(S, "SCRATCH_ROOT", str(root))
     d = S.scratch_dir("fresh", "/data/sf0.01")
     assert d == str(root / f"fresh_sf0.01_pid{os.getpid()}")
     assert not dead.exists(), "dead-owner scratch dir must be swept"

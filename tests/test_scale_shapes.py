@@ -304,12 +304,11 @@ def test_dynamic_partition_pruning_fires_on_partitioned_join(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from self_healing_data_pipeline_spark.queries.core import _SCRATCH
+    from self_healing_data_pipeline_spark.session import SCRATCH_ROOT
     from self_healing_data_pipeline_spark.sources.writers import write_parquet
 
-    out = os.path.join(_SCRATCH, f"orders_by_year_{os.path.basename(sf_dir)}")
+    out = os.path.join(SCRATCH_ROOT, f"orders_by_year_{os.path.basename(sf_dir)}")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        os.makedirs(_SCRATCH, exist_ok=True)
         from self_healing_data_pipeline_spark.sources.readers import read_table
 
         write_parquet(
@@ -630,7 +629,7 @@ def test_extras19_reports_are_bounded(spark, sf_dir):
     p = plan_of(spark, sf_dir, "q_fd_discovery")
     assert p.count("SinglePartition") <= len(
         __import__(
-            "self_healing_data_pipeline_spark.queries.extras19",
+            "self_healing_data_pipeline_spark.queries.dq",
             fromlist=["_FD_CANDIDATES"],
         )._FD_CANDIDATES
     )

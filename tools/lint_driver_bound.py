@@ -17,12 +17,12 @@ same discipline ``lint_scale.py`` applies to quadratic HOFs.
 Round-12 census result: 30 sites, 28 bounded as written; 2 findings
 fixed the same round —
 
-* ``queries/extras72.py::ivfadc_per_probe`` collected an UNCAPPED
+* ``queries/similarity.py::ivfadc_per_probe`` collected an UNCAPPED
   n/50 probe panel (a corpus FRACTION, not a fixed eval workload) and
   looped a driver einsum per probe; capped to the first 40 sampled ids
   (the q_ann_two_stage discipline) — bit-identical at the driver SFs
   (panels were 10/10/40), O(1) driver state at any scale.
-* ``queries/extras6.py::q_neardup_registry`` collected EVERY accepted
+* ``queries/streams.py::q_neardup_registry`` collected EVERY accepted
   doc id (~n/4 rows) into a Python set purely to assert a set-equality
   witness; rewritten as two distributed key-only anti-joins + counts.
 
@@ -37,10 +37,9 @@ the operator's required output with a measured adversarial tier
 (semdedup's identical-vector groups).
 
 Known adjacent class, deliberately out of scope here: EXECUTOR-side
-broadcasts that scale with the corpus (e.g. extras55's uncapped n/50
-probe panel is crossJoin-broadcast, never collected). Those are plan
+broadcasts that scale with the corpus. Those are plan
 shapes, not driver materializations; the sf1 probe tier and the plan
-census own them (extras55 is the round-13 candidate).
+census own them.
 
 Site keys are ``relpath::qualname#ordinal`` (driver class) or
 ``relpath::qualname@ordinal`` (group class) — the ordinal is the
@@ -89,13 +88,13 @@ AUDITED: dict[str, str] = {
     "sources/writers.py::zorder_write#0": (
         "one aggregate row: per-column min/max for Morton bucketing"
     ),
-    "queries/extras8.py::q_stream_heavy_hitters#0": (
+    "queries/streams.py::q_stream_heavy_hitters#0": (
         "scalar max(event_id) — epoch cut points"
     ),
-    "queries/extras16.py::q_stream_quantiles#0": (
+    "queries/streams.py::q_stream_quantiles#0": (
         "scalar max(event_id) — epoch cut points"
     ),
-    "queries/extras6.py::q_dedup_registry#0": (
+    "queries/streams.py::q_dedup_registry#0": (
         "scalar max(doc_id) — epoch cut points"
     ),
     "streaming/incremental_join.py::apply_join_delta_batch#0": (
@@ -106,10 +105,10 @@ AUDITED: dict[str, str] = {
         "distinct 'side' values of the delta batch — ≤2 rows at any "
         "batch size (round-13 one-pass side-presence probe)"
     ),
-    "queries/analytics2.py::q_pareto_frontier#0": (
+    "queries/stats.py::q_pareto_frontier#0": (
         "one aggregate row: global min/max of the spend domain"
     ),
-    "queries/analytics2.py::q_customer_rfm#0": (
+    "queries/reports.py::q_customer_rfm#0": (
         "one aggregate row: n + per-dim lo/hi"
     ),
     "streaming/heavy_hitters.py::apply_heavy_hitters_batch#0": (
@@ -134,7 +133,7 @@ AUDITED: dict[str, str] = {
     "operators/similarity.py::pq_train#0": (
         "limit(k) — PQ seed codebook rows, k<=256"
     ),
-    "queries/extras72.py::ivfadc_per_probe#0": (
+    "queries/similarity.py::ivfadc_per_probe#0": (
         "limit(_PANEL_CAP=40) TakeOrdered — fixed eval probe panel "
         "(round-12 fix: was an uncapped n/50 corpus fraction)"
     ),
@@ -148,27 +147,27 @@ AUDITED: dict[str, str] = {
     "operators/similarity.py::pq_train#1": (
         "(subspace, code, sub-dim) grain = dim x k rows per iteration"
     ),
-    "queries/analytics2.py::q_pareto_frontier#1": (
+    "queries/stats.py::q_pareto_frontier#1": (
         "per-bucket maxima — width law caps buckets at ~1001"
     ),
-    "queries/analytics2.py::q_customer_rfm#1": (
+    "queries/reports.py::q_customer_rfm#1": (
         "(dim, bucket) counts — dims x ~1001 width-law buckets"
     ),
-    "queries/analytics2.py::q_customer_rfm#2": (
+    "queries/reports.py::q_customer_rfm#2": (
         "NTILE boundary rows — <= 3 edges x dims rows"
     ),
-    "queries/extras16.py::q_stream_quantiles#1": (
+    "queries/streams.py::q_stream_quantiles#1": (
         "bucket-grain rollup state — cents domain / bucket width"
     ),
     # --------------------------------------- per-partition summaries
-    "queries/analytics2.py::q_heavy_hitters#0": (
+    "queries/stats.py::q_heavy_hitters#0": (
         "MG partition summaries — <= (k+1) x numPartitions rows, k=256"
     ),
-    "queries/extras75.py::q_embedding_pca#0": (
+    "queries/vectors.py::q_embedding_pca#0": (
         "Gram partials — numPartitions x (dim^2+dim+1) doubles, dim=64"
     ),
     # ------------------------------------------ catalog-grain results
-    "queries/catalog_queries.py::discovered_fk_edges#0": (
+    "queries/catalog.py::discovered_fk_edges#0": (
         "FK edge catalog — bounded by table-pair grain (~14 edges)"
     ),
     # ------------------------------------- caller-verified small sets
@@ -198,7 +197,7 @@ AUDITED_GROUP: dict[str, str] = {
         "(≤ ~7 on TPC-H-shaped data), the bound the previous "
         "self-join's Σ|basket|² argument already relied on"
     ),
-    "queries/extras4.py::q_basket_pairs@0": (
+    "queries/graph.py::q_basket_pairs@0": (
         "per-order part multiset (collect_list) — bounded by "
         "lines-per-order (≤ ~7), the multiset twin of order_baskets"
     ),
@@ -206,43 +205,43 @@ AUDITED_GROUP: dict[str, str] = {
         "identical-vector value groups; member ids ARE the survivor "
         "output grain — hot-vector adversarial tier measured linear"
     ),
-    "queries/extras8.py::q_inverted_index@0": (
+    "queries/text.py::q_inverted_index@0": (
         "postings head <= 16 ids: when() nulls rows past rank 16 and "
         "collect_list skips nulls"
     ),
-    "queries/extras82.py::q_array_hof_predicates@0": (
+    "queries/sql_scalars.py::q_array_hof_predicates@0": (
         "per-order line list — bounded by order width (7 in TPC-H; "
         "order grain at any corpus scale)"
     ),
-    "queries/extras.py::q_agg_listagg@0": (
+    "queries/sql_aggregates.py::q_agg_listagg@0": (
         "LISTAGG demo: n_name per region — <= 25 nations per group "
         "(dimension grain)"
     ),
-    "queries/analytics2.py::q_sequence_match@0": (
+    "queries/events.py::q_sequence_match@0": (
         "per (user, day) event string — calendar-day grain; skewed "
         "users bounded by events/user/day"
     ),
-    "queries/extras61.py::q_feature_hash_audit@0": (
+    "queries/stats.py::q_feature_hash_audit@0": (
         "feature names per hash bucket — catalog grain (|columns|), "
         "not data grain"
     ),
-    "queries/extras30.py::q_text_keyphrase@0": (
+    "queries/text.py::q_text_keyphrase@0": (
         "tokens per stopword-gap phrase run — doc-length bounded, "
         "long-doc tier measured; plen filter 2.._MAX_PHRASE"
     ),
-    "queries/extras12.py::q_survival_km@0": (
+    "queries/stats.py::q_survival_km@0": (
         "one global Kaplan-Meier curve over the DISTINCT duration "
         "domain (day grain), not event rows"
     ),
-    "queries/analytics.py::q_events_top_paths@0": (
+    "queries/events.py::q_events_top_paths@0": (
         "events per 30-min-gap session — session grain; skew-safe "
         "sessionization tier covers hot users"
     ),
-    "queries/llm_ops.py::q_contamination@0": (
+    "queries/corpus.py::q_contamination@0": (
         "<= _CONTAM_GRAM_DF_CAP doc ids per gram: window df filter "
         "lands BEFORE the set-collect"
     ),
-    "queries/llm_ops.py::q_contamination@1": (
+    "queries/corpus.py::q_contamination@1": (
         "same pre-capped gram groups, non-probe side"
     ),
 }

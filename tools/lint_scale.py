@@ -204,7 +204,7 @@ def lint_tree(root: str = SRC_ROOT) -> list[str]:
 # looked BEFORE their refits. Reverting any fix re-creates one of these
 # shapes, and the selftest pins that every shape is flagged.
 BAD_FIXTURES = {
-    # q_dict_candidates (extras59.py pre-refit): 16-char grams at
+    # q_dict_candidates (pre-refit): 16-char grams at
     # stride 8 by dynamic-position substring — 307.8 s DNF-class
     "dict_candidates": (
         'df.select(F.expr("transform(sequence(1, length(nt) - 15, 8),'
