@@ -19,8 +19,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from self_healing_data_pipeline_spark.plans.profiler import _ident
 
 # Widening lattice: a type may move rightward only. Anything not on the
 # lattice (or conflicting branches, e.g. date vs bigint) falls back to
@@ -150,14 +151,30 @@ def evolved_schema(old: T.StructType, new: T.StructType) -> T.StructType:
 
 def conform(df: DataFrame, target: T.StructType) -> DataFrame:
     """Project ``df`` onto ``target``: cast matching columns, null-fill
-    missing ones. Narrow (per-row) — no shuffle."""
+    missing ones. Narrow (per-row) — no shuffle. One ``selectExpr`` of
+    quoted identifiers, so a name like ``a.b`` is a column, not a path."""
     have = {f.name for f in df.schema.fields}
-    cols = [
-        (F.col(f.name).cast(f.dataType) if f.name in have
-         else F.lit(None).cast(f.dataType)).alias(f.name)
-        for f in target.fields
-    ]
-    return df.select(*cols)
+    return df.selectExpr(
+        *(
+            f"CAST({_ident(f.name) if f.name in have else 'NULL'}"
+            f" AS {_sql_type(f.dataType)}) AS {_ident(f.name)}"
+            for f in target.fields
+        )
+    )
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """``dt`` as a SQL type; unlike ``simpleString`` it quotes struct
+    field names, so a field named ``x y`` parses."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{_ident(f.name)}:{_sql_type(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def evolve_union(

@@ -15,7 +15,10 @@ from self_healing_data_pipeline_spark.operators.dedup import normalize_text
 from self_healing_data_pipeline_spark.operators.dedup import NORMALIZE_TEXT_SQL as _NORM
 from self_healing_data_pipeline_spark.plans.lineage import LineageLog
 from self_healing_data_pipeline_spark.registry import query
-from self_healing_data_pipeline_spark.sources.readers import read_table
+from self_healing_data_pipeline_spark.sources.readers import (
+    listing_fingerprint,
+    read_table,
+)
 
 
 # Catalog / lineage queries — the reference's knowledge-graph vision
@@ -407,34 +410,21 @@ _FK_CATALOG: dict[tuple, list[dict]] = {}
 
 
 def _catalog_key(spark, sf_dir) -> tuple:
-    """Memo key folding a cheap fingerprint of the sf_dir parquet
-    entries (name, mtime_ns, size) so a regenerated fixture within one
-    Spark application invalidates the catalogs instead of serving
-    stale entries while the DuckDB oracle reads fresh data (round-11
-    advisor item). A ``*.parquet`` entry that is a DIRECTORY (Spark
-    layout: part-files inside) is fingerprinted one level deep — inner
-    part-files can be rewritten without touching the directory entry's
-    own mtime (round-11 advisor item, the ``_corpus_fingerprint``
-    discipline from extras72). Catalog grain: a handful of entries."""
+    """Memo key folding the listing fingerprint of every sf_dir parquet
+    entry (``sources.readers.listing_fingerprint``, the rule the parquet
+    schema catalog uses) so a regenerated fixture within one Spark
+    application invalidates the catalogs instead of serving stale
+    entries while the DuckDB oracle reads fresh data. A ``*.parquet``
+    entry that is a DIRECTORY (Spark layout: part-files inside) is
+    fingerprinted one level deep — inner part-files can be rewritten
+    without touching the directory entry's own mtime. Catalog grain: a
+    handful of entries."""
     import os
 
     norm = os.path.normpath(sf_dir)
-
-    def _entry_fp(e):
-        if e.is_dir():
-            inner = tuple(
-                sorted(
-                    (i.name, i.stat().st_mtime_ns, i.stat().st_size)
-                    for i in os.scandir(e.path)
-                )
-            )
-            return (e.name, "dir", inner)
-        st = e.stat()
-        return (e.name, st.st_mtime_ns, st.st_size)
-
     fp = tuple(
         sorted(
-            _entry_fp(e)
+            (e.name, listing_fingerprint(e.path))
             for e in os.scandir(norm)
             if e.name.endswith(".parquet")
         )
@@ -1744,10 +1734,6 @@ def q_selectivity_audit(spark, sf_dir):
 # the static declared pipeline — both queries are fully oracle-backed.
 
 
-#: Session catalog of has_column schema edges (parquet-footer capture),
-#: same discipline and key rule as _FK_CATALOG.
-_SCHEMA_CATALOG: dict[tuple, list[tuple]] = {}
-
 #: Every fixture table contributes its schema to the graph's
 #: has_column edges (names come from the parquet footers on the Spark
 #: side and DESCRIBE on the DuckDB side — a real capture, not a
@@ -1815,21 +1801,18 @@ def q_catalog_graph(spark, sf_dir):
     q_join_discovery's distinct-value shuffle (key values only, never
     payloads); lineage edges are O(stages). The union is metadata-
     sized at any corpus scale — the whole point of a catalog graph.
-    Round 11: schema capture (parquet-footer reads per table) and the
-    lineage capture both read their session CATALOGS (the FK-edge
+    Schema capture resolves each table through the parquet schema
+    catalog (``sources.readers``: inferred once per file listing), and
+    the lineage capture reads its session CATALOG (the FK-edge
     discipline) — a platform catalogs schema/lineage once at ingest;
     q_lineage_downstream remains the priced lineage-capture key."""
-    key = _catalog_key(spark, sf_dir)
-    if key not in _SCHEMA_CATALOG:
-        while len(_SCHEMA_CATALOG) >= 8:
-            _SCHEMA_CATALOG.pop(next(iter(_SCHEMA_CATALOG)))
-        _SCHEMA_CATALOG[key] = [
+    has_col = spark.createDataFrame(
+        [
             ("has_column", t, f"{t}.{c}")
             for t in _TABLES
             for c in read_table(spark, sf_dir, t).schema.names
-        ]
-    has_col = spark.createDataFrame(
-        _SCHEMA_CATALOG[key], "edge_type string, src string, dst string"
+        ],
+        "edge_type string, src string, dst string",
     )
     # Read the CATALOGED discovery result (discovered_fk_edges — runs
     # the distinct-value pipeline once per session and memoizes; the

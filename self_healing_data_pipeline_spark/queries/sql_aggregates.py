@@ -1722,7 +1722,7 @@ def q_string_agg(spark, sf_dir):
 def q_percentile_within_group(spark, sf_dir):
     """NATIVE ordered-set aggregate percentile_cont WITHIN GROUP
     (Spark 4 syntax): exact interpolated quartiles of customer balance
-    per market segment. Complements q_percentile_cont (extras32.py),
+    per market segment. Complements q_percentile_cont (sql_aggregates.py),
     which pins the MANUAL mirrored formulation on both engines; this
     key exercises the built-in aggregate itself — its WITHIN GROUP
     parse path and its partial-aggregated Percentile plan — on integer cents so the only float operation

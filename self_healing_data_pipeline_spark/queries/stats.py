@@ -1076,7 +1076,7 @@ def q_regr_slope(spark, sf_dir):
     per cent so the ×100 scaling cancels), the centered intercept, and
     R² — the trend line a profiler draws on every scatter panel.
 
-    Exactness (the q_corr_matrix discipline, extras42): cents are
+    Exactness (the q_corr_matrix discipline, stats.py): cents are
     exact ints, per-group integer floor means center the moments so
     n·variance-scale sums stay in int64, and slope/intercept/R² are
     mirrored IEEE chains over correctly-rounded BIGINT→DOUBLE hops.

@@ -380,7 +380,7 @@ def q_text_docfreq(spark, sf_dir):
     transcendental differs across libm builds. Explode + two hash
     aggregates, all map-side partial; the shuffle key is the token. The
     corpus-size scalar stays INSIDE the plan as a broadcast-crossJoined
-    1-row aggregate (same pattern as extras.q_subquery_scalar) — no
+    1-row aggregate (same pattern as sql_relational.q_subquery_scalar) — no
     separate driver-side count job, one plan, one scan schedule."""
     d = read_table(spark, sf_dir, "documents")
     n_docs = d.agg(F.count(F.lit(1)).cast("double").alias("_n_docs"))
@@ -2459,7 +2459,7 @@ _PHONE_RE = r"[0-9][0-9][0-9][-.][0-9][0-9][0-9][-.][0-9][0-9][0-9][0-9]"
     """,
 )
 def q_pii_redact_injected(spark, sf_dir):
-    """PII REDACTION with POSITIVE SIGNAL — q_pii_redact (extras17.py)
+    """PII REDACTION with POSITIVE SIGNAL — q_pii_redact (text.py)
     proves the redaction pipeline leaves clean text untouched (the
     fixture corpus is PII-free, so its counts are all zero); this twin
     proves it actually REDACTS. The fixture corpus is PII-free

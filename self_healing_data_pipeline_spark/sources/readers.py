@@ -15,6 +15,22 @@ Reference behavior being re-expressed (SURVEY.md §1.3, §2.1):
   ``StructType`` contract so later loads cast/reject instead of re-inferring
   (reference freezes via LLM-generated DDL, ``geminiService.ts:101-147``).
 
+The engine applies the same freeze to its own parquet reads. Spark's
+schema inference for a parquet path is a Spark job (53-66 ms per sf0.01
+table on a 4-core VM); a read with a known schema submits none. The process-level schema
+catalog (``_SCHEMA_CATALOG``) therefore resolves each parquet path once:
+
+- key: the absolute path, valid only while :func:`listing_fingerprint` of
+  the path is unchanged — ``(size, mtime_ns)`` for a file, the sorted
+  ``(name, size, mtime_ns)`` of a directory's entries one level deep — so
+  a table or snapshot rewritten at the same path is inferred again;
+- value: the inferred ``StructType`` and the NANOS timestamp columns;
+- bound: a FIFO of ``_SCHEMA_CATALOG_SIZE`` paths (a constant).
+
+It holds metadata only: every read still lists and scans the files.
+``streaming.snapshots.commit_snapshot`` records the schema it wrote, so a
+snapshot read back by the process that committed it is never inferred.
+
 Scale notes: these are plain Spark readers, so parquet scans get predicate
 pushdown / column pruning / partition pruning from Catalyst for free; CSV and
 JSON scans are splittable (uncompressed) and parallelize across executors.
@@ -84,16 +100,29 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     ALL engine parquet reads go through here so the conversion is uniform
     regardless of read order (the legacy conf, once set, would otherwise
     make a later plain read silently return bigint nanos).
+
+    The schema comes from the catalog when the path's listing is
+    unchanged since it was recorded; otherwise the footer is read and
+    Spark infers the schema, and the result is recorded.
     """
-    nanos_cols = _nanos_timestamp_columns(path)
+    # Fingerprint before inferring: a rewrite racing the read then
+    # misses on the next call instead of keeping a stale schema.
+    fingerprint = listing_fingerprint(path)
+    hit = _entry(path, fingerprint)
+    schema, nanos_cols = hit or (None, _nanos_timestamp_columns(path))
+    if nanos_cols:
+        # Leave the conf on: it is consulted again at scan execution time,
+        # and it only affects files that actually contain NANOS columns.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if schema is None:
+        out = spark.read.parquet(path)
+        _record(path, fingerprint, out.schema, nanos_cols)
+    else:
+        out = spark.read.schema(schema).parquet(path)
     if not nanos_cols:
-        return spark.read.parquet(path)
-    # Leave the conf on: it is consulted again at scan execution time, and
-    # it only affects files that actually contain NANOS columns.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return out
     from pyspark.sql import functions as F
 
-    out = spark.read.parquet(path)
     for name_ in nanos_cols:
         out = out.withColumn(
             name_,
@@ -104,6 +133,52 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             ),
         )
     return out
+
+
+#: Paths the schema catalog holds at most; the oldest is dropped first.
+_SCHEMA_CATALOG_SIZE = 256
+
+#: absolute path -> (listing fingerprint, schema, NANOS columns).
+_SCHEMA_CATALOG: dict[str, tuple[tuple, T.StructType, tuple[str, ...]]] = {}
+
+
+def listing_fingerprint(path: str) -> tuple:
+    """``(size, mtime_ns)`` of a file; for a directory, the sorted
+    ``(name, size, mtime_ns)`` of its entries, one level deep (Spark
+    rewrites part files without touching the directory's own mtime)."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns)
+    stats = ((e.name, e.stat()) for e in os.scandir(path))
+    return tuple(sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats))
+
+
+def _entry(path: str, fingerprint: tuple) -> tuple | None:
+    """``(schema, NANOS columns)`` if ``path`` was recorded under
+    ``fingerprint``, else None."""
+    entry = _SCHEMA_CATALOG.get(os.path.abspath(path))
+    return entry[1:] if entry is not None and entry[0] == fingerprint else None
+
+
+def cataloged_schema(path: str) -> T.StructType | None:
+    """The recorded schema of ``path`` if its listing is unchanged."""
+    entry = _entry(path, listing_fingerprint(path))
+    return None if entry is None else entry[0]
+
+
+def record_schema(path: str, schema: T.StructType) -> None:
+    """Record ``schema`` (as Spark reads it) under ``path``'s listing now."""
+    _record(path, listing_fingerprint(path), schema, [])
+
+
+def _record(
+    path: str, fingerprint: tuple, schema: T.StructType, nanos_cols: list[str]
+) -> None:
+    key = os.path.abspath(path)
+    _SCHEMA_CATALOG.pop(key, None)
+    while len(_SCHEMA_CATALOG) >= _SCHEMA_CATALOG_SIZE:
+        _SCHEMA_CATALOG.pop(next(iter(_SCHEMA_CATALOG)))
+    _SCHEMA_CATALOG[key] = (fingerprint, schema, tuple(nanos_cols))
 
 
 _READERS = {
@@ -133,7 +208,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _nanos_timestamp_columns(path: str) -> list[str]:
     """Names of parquet fields typed timestamp[ns] (from the footer).
     Accepts a single file or a Spark-written directory (reads the first
-    part file's footer — Spark writes a uniform schema per directory)."""
+    part file's footer — Spark writes a uniform schema per directory).
+    INT96 timestamps (Spark's default output type) are not NANOS
+    columns: pyarrow would read them as timestamp[ns] unless coerced."""
     import glob
 
     import pyarrow.parquet as pq
@@ -143,7 +220,8 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
         if not parts:
             return []
         path = parts[0]
-    schema = pq.read_schema(path)
+    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as f:
+        schema = f.schema_arrow
     return [
         schema.field(i).name
         for i in range(len(schema))

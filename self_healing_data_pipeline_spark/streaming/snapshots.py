@@ -20,7 +20,12 @@ no other module builds that path.
   then read its OWN output (additive merges double-count), so stores
   pass ``before_epoch=N`` and replay re-derives the same bytes from the
   same inputs. Resolution is gap-tolerant: a store that skips an epoch
-  resolves the newest committed epoch below the anchor.
+  resolves the newest committed epoch below the anchor. A commit
+  records the schema it wrote in the parquet schema catalog
+  (``sources.readers``), keyed on the listing it just committed, and
+  readers resolve schemas there: reading back a snapshot this process
+  committed submits no schema-inference job, while a snapshot from an
+  earlier process (or one rewritten since) is inferred once.
 * **Retain.** :func:`prune_snapshots` keeps the newest ``keep``
   committed epochs and never touches a directory above the newest
   committed one (a write that may still be in flight).
@@ -35,6 +40,13 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from self_healing_data_pipeline_spark.sources.readers import (
+    cataloged_schema,
+    read_parquet,
+    record_schema,
+)
 
 
 def _path(state_dir: str, epoch_id: int) -> str:
@@ -64,8 +76,30 @@ def committed_epochs(state_dir: str, before_epoch: int | None = None) -> list[in
 
 
 def commit_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
-    """Write ``df`` as the epoch's snapshot (an idempotent overwrite)."""
-    df.write.mode("overwrite").parquet(_path(state_dir, epoch_id))
+    """Write ``df`` as the epoch's snapshot (an idempotent overwrite) and
+    record its schema as Spark will read it back: every field nullable."""
+    path = _path(state_dir, epoch_id)
+    df.write.mode("overwrite").parquet(path)
+    record_schema(path, _as_nullable(df.schema))
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable, the schema
+    Spark gives a file source."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
 
 
 def read_latest_snapshot(
@@ -76,17 +110,23 @@ def read_latest_snapshot(
     epochs = committed_epochs(state_dir, before_epoch)
     if not epochs:
         return None
-    return spark.read.parquet(_path(state_dir, epochs[-1]))
+    return read_parquet(spark, _path(state_dir, epochs[-1]))
 
 
 def read_all_snapshots(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Union of every committed epoch's snapshot (one scan over all of
     them), or None before the first commit — the read side of the
-    per-epoch output stores."""
+    per-epoch output stores. The schema is the recorded one when every
+    epoch has the same recorded schema; otherwise Spark infers it."""
     epochs = committed_epochs(state_dir)
     if not epochs:
         return None
-    return spark.read.parquet(*(_path(state_dir, e) for e in epochs))
+    paths = [_path(state_dir, e) for e in epochs]
+    schemas = [cataloged_schema(p) for p in paths]
+    reader = spark.read
+    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+        reader = reader.schema(schemas[0])
+    return reader.parquet(*paths)
 
 
 def prune_snapshots(state_dir: str, keep: int = 2) -> list[int]:

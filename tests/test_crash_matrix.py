@@ -36,6 +36,7 @@ from self_healing_data_pipeline_spark.streaming import (
 )
 from self_healing_data_pipeline_spark.streaming.snapshots import (
     committed_epochs,
+    read_all_snapshots,
     read_latest_snapshot,
 )
 
@@ -186,14 +187,24 @@ def _rows(df):
 
 
 def _committed_rows(spark, root, dirs):
-    """{store dir: {epoch: sorted rows}} over every committed snapshot."""
+    """{store dir: {epoch: sorted rows}} over every committed snapshot.
+
+    Each snapshot, and the union of them all, must resolve to exactly
+    the schema Spark infers from the files, whether its schema was
+    recorded at commit or is read from a copied directory."""
     out = {}
     for d in dirs:
         path = f"{root}/{d}"
-        out[d] = {
-            e: _rows(read_latest_snapshot(spark, path, before_epoch=e + 1))
-            for e in committed_epochs(path)
-        }
+        out[d] = {}
+        for e in committed_epochs(path):
+            snap = read_latest_snapshot(spark, path, before_epoch=e + 1)
+            inferred = spark.read.parquet(f"{path}/batch={e}").schema
+            assert snap.schema == inferred, (d, e)
+            out[d][e] = _rows(snap)
+        if out[d]:
+            paths = [f"{path}/batch={e}" for e in out[d]]
+            union = read_all_snapshots(spark, path)
+            assert union.schema == spark.read.parquet(*paths).schema, d
     return out
 
 

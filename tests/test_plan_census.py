@@ -32,12 +32,14 @@ label_prop, triangles, jaccard, degree, item_cf, pagerank), green on
 tree.
 
 Re-measure the pins whenever a builder shared by these keys changes
-(``operators/graph.py``, the ``localCheckpoint`` sites): run each key as
-``test_executed_plan_census`` does, on the tree and with
-``localCheckpoint`` patched to return ``self`` on
+(``operators/graph.py``, the ``localCheckpoint`` sites) or the number of
+jobs a table read takes changes: ``python tests/test_plan_census.py``
+runs each key as ``test_executed_plan_census`` does, on the tree and
+with ``localCheckpoint`` patched to return ``self`` on
 ``pyspark.sql.classic.dataframe.DataFrame`` (in pyspark 4 patching
-``pyspark.sql.DataFrame`` alone leaves the checkpoints in place), then
-apply the two midpoint rules stated at ``PLAN_BUDGETS``.
+``pyspark.sql.DataFrame`` alone leaves the checkpoints in place), and
+prints both counts with the pins the two midpoint rules stated at
+``PLAN_BUDGETS`` give.
 """
 
 from __future__ import annotations
@@ -53,38 +55,41 @@ sys.path.insert(0, REPO)
 SF_DIR = "/root/testdata/sf0.001"
 
 #: key -> (jobs_min, jobs_max, stages_max). Measured steady-state
-#: (jobs, stages) on tree / with every localCheckpoint a no-op, after
-#: the basket-form pair build (ac0586d, extended to item_cf by 532da94):
-#:   khop 20/30 vs 19/71-77 · label_prop 20/30 vs 12/48
-#:   triangles 17/27 vs 14/35-37 · jaccard 11/16 vs 9/18
-#:   degree 9/18 vs 8/21 · item_cf 10/17 vs 9/20-21
-#:   pagerank 17/29 vs 15/44-46 (re-measured: 17/29 ×3 vs 15/46 ×3)
-#:   discovery_sketch 21/39
-#:   window_exclude 10/23 · ivfadc 23/44
+#: (jobs, stages) on tree / with every localCheckpoint a no-op, since
+#: table and snapshot reads resolve their schemas from the parquet
+#: schema catalog (one inference job fewer per table read):
+#:   khop 19/29 vs 18/71 · label_prop 19/29 vs 11/47
+#:   triangles 16/26 vs 13/34 · jaccard 10/15 vs 8/17
+#:   degree 8/17 vs 7/20 · item_cf 9/16 vs 8/19
+#:   pagerank 16/28 vs 14/43
+#:   discovery_sketch 7/25 (no checkpoints: same with the no-op)
+#:   window_exclude 9/22 · ivfadc 22/43
 #: Discriminating pins sit at the midpoint of the measurement they were
 #: set on: jobs_min = floor((tree + no-op) / 2) and stages_max =
-#: ceil((tree + no-op) / 2). khop's jobs_min 19, triangles' 15,
-#: jaccard's 10, item_cf's stages_max 19 and pagerank's 16 / 37 come
-#: from the counts above (pagerank's stages midpoint uses the low end
-#: of its no-op range, 44, so every no-op run seen exceeds it);
-#: khop's stages_max 66 and label_prop's 18 / 44 come from the
-#: pre-ac0586d counts (khop 30/58 vs 19/73, label_prop 24/38 vs 13/50),
-#: which the current counts still straddle. degree's jobs_min is its
-#: tree count (9 vs 8 has no integer midpoint). jobs_max and the other
-#: stages_max carry headroom over the tree count for AQE jitter.
+#: ceil((tree + no-op) / 2). A pin moves only when the tree fails it
+#: or the no-op passes it, so most still come from earlier counts
+#: (before the catalog, tree / no-op: khop 20/30 vs 19/71-77, triangles
+#: 17/27 vs 14/35-37, jaccard 11/16 vs 9/18, item_cf 10/17 vs 9/20-21,
+#: pagerank 17/29 vs 15/44-46; khop's stages_max 66 and label_prop's
+#: 18 / 44 from the pre-ac0586d counts khop 30/58 vs 19/73 and
+#: label_prop 24/38 vs 13/50), which the current counts still
+#: straddle. degree's jobs_min is its tree count (8 vs 7 has no
+#: integer midpoint); discovery_sketch's jobs_min is its tree count
+#: too, as it has no checkpoint. jobs_max and the other stages_max
+#: carry headroom over the tree count for AQE jitter.
 PLAN_BUDGETS: dict[str, tuple[int, int, int]] = {
     # iterative / multi-reference graph family (the 93df3cf class)
     "q_khop_reach": (19, 45, 66),
     "q_label_propagation": (18, 36, 44),
     "q_part_triangles": (15, 33, 48),
     "q_graph_neighbor_jaccard": (10, 23, 32),
-    "q_degree_distribution": (9, 14, 20),
+    "q_degree_distribution": (8, 14, 20),
     "q_item_cf": (9, 17, 19),
     "q_pagerank": (16, 32, 37),
     # cached-subtree printing artifact (task 7): the formatted plan
     # prints 77 scans; execution is two passes — the budget pins the
     # EXECUTED count, no cosmetic exception needed
-    "q_join_discovery_sketch": (15, 32, 50),
+    "q_join_discovery_sketch": (7, 32, 50),
     # heavy keys worth a structural pin (no checkpoint discipline:
     # jobs_min 1 just asserts execution happened)
     "q_window_exclude": (1, 16, 30),
@@ -93,12 +98,13 @@ PLAN_BUDGETS: dict[str, tuple[int, int, int]] = {
     # on the ITERATIVE/STATEFUL class (multi-epoch registries, the
     # incremental view, recursive closure) where lineage regrowth
     # would reappear first. Measured steady-state (jobs, stages) at
-    # sf0.001, two consecutive counted runs identical per key:
-    #   incremental_join_view 57/78 · join_discovery 46/73
-    #   stream_heavy_hitters 43/82 · neardup_registry 47/69
-    #   dedup_registry 23/34 · recursive_reach 28/52
-    #   stream_quantiles 22/33 · threshold_sweep 8/21
-    #   containment 11/25 · jaccard_prefix 9/25
+    # sf0.001 with the schema catalog (the pins were set on counts
+    # 1-14 jobs higher, before it):
+    #   incremental_join_view 43/62 · join_discovery 32/59
+    #   stream_heavy_hitters 39/78 · neardup_registry 46/66
+    #   dedup_registry 19/30 · recursive_reach 26/52
+    #   stream_quantiles 18/29 · threshold_sweep 9/19
+    #   containment 10/20 · jaccard_prefix 10/22
     "q_incremental_join_view": (40, 85, 120),
     "q_join_discovery": (30, 70, 110),
     "q_stream_heavy_hitters": (30, 65, 125),
@@ -141,6 +147,11 @@ def _run_counted(spark, fn, name: str) -> tuple[int, int]:
     return len(job_ids), len(stages)
 
 
+def _within(pin: tuple[int, int, int], jobs: int, stages: int) -> bool:
+    jobs_min, jobs_max, stages_max = pin
+    return jobs_min <= jobs <= jobs_max and stages <= stages_max
+
+
 @pytest.mark.parametrize("name", sorted(PLAN_BUDGETS))
 def test_executed_plan_census(spark, entry_queries, name):
     fn = entry_queries.get(name)
@@ -148,7 +159,7 @@ def test_executed_plan_census(spark, entry_queries, name):
     _run_counted(spark, fn, f"warm-{name}")  # warm session caches
     jobs, stages = _run_counted(spark, fn, name)
     jobs_min, jobs_max, stages_max = PLAN_BUDGETS[name]
-    assert jobs_min <= jobs <= jobs_max and stages <= stages_max, (
+    assert _within(PLAN_BUDGETS[name], jobs, stages), (
         f"{name} executed {jobs} jobs / {stages} stages at sf0.001 "
         f"(shape pin: jobs in [{jobs_min}, {jobs_max}], stages <= "
         f"{stages_max}) — too few jobs means the eager localCheckpoint "
@@ -157,3 +168,43 @@ def test_executed_plan_census(spark, entry_queries, name):
         "a runaway iterative loop; check .explain('formatted') and "
         "re-measure before changing the pin"
     )
+
+
+def _measure(spark, queries, tag: str) -> dict[str, tuple[int, int]]:
+    # Job groups accumulate, so each measurement needs its own names.
+    out = {}
+    for name in sorted(PLAN_BUDGETS):
+        _run_counted(spark, queries[name], f"{tag}-warm-{name}")
+        out[name] = _run_counted(spark, queries[name], f"{tag}-{name}")
+    return out
+
+
+def main() -> None:
+    """Print tree / no-op counts and the midpoint pins for every key."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import __spark_entry__ as entrymod
+    from self_healing_data_pipeline_spark.session import get_spark
+
+    spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
+    queries = entrymod.queries()
+    tree = _measure(spark, queries, "tree")
+    real = DataFrame.localCheckpoint
+    DataFrame.localCheckpoint = lambda self, *a, **kw: self
+    try:
+        noop = _measure(spark, queries, "noop")
+    finally:
+        DataFrame.localCheckpoint = real
+    print("key  tree jobs/stages  no-op jobs/stages  pin  tree-passes"
+          "  no-op-caught  midpoint pins")
+    for name in sorted(PLAN_BUDGETS):
+        (tj, ts), (nj, ns), pin = tree[name], noop[name], PLAN_BUDGETS[name]
+        print(
+            f"{name}  {tj}/{ts}  {nj}/{ns}  {pin}  {_within(pin, tj, ts)}"
+            f"  {not _within(pin, nj, ns)}"
+            f"  jobs_min={(tj + nj) // 2} stages_max={-(-(ts + ns) // 2)}"
+        )
+
+
+if __name__ == "__main__":
+    main()

@@ -125,3 +125,20 @@ def test_conform_casts_and_fills(spark):
     df = conform(spark.createDataFrame([(7,)], "id int"), target)
     assert dict(df.dtypes) == {"id": "bigint", "v": "double"}
     assert df.collect()[0]["v"] is None
+
+
+def test_evolve_union_dotted_spaced_and_nested_names(spark):
+    """Names are identifiers, never column paths: ``a.b`` is one column
+    (not field ``b`` of ``a``), and a struct field named ``x y`` survives
+    the cast to the evolved struct type."""
+    h = spark.createDataFrame(
+        [(1, "p", (5,))], "`a.b` int, `c d` string, s struct<`x y`: int>"
+    )
+    i = spark.createDataFrame([(2**40, (6,))], "`a.b` long, s struct<`x y`: int>")
+    out, events = evolve_union(h, i)
+    assert out.columns == ["a.b", "c d", "s"]
+    assert dict(out.dtypes)["a.b"] == "bigint"
+    assert out.schema["s"].dataType.names == ["x y"]
+    rows = sorted((r[0], r[1], r[2][0]) for r in out.collect())
+    assert rows == [(1, "p", 5), (2**40, None, 6)]
+    assert {e.column: e.kind for e in events} == {"a.b": "widened", "c d": "removed"}

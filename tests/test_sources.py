@@ -99,13 +99,126 @@ def test_empty_csv_header_only(spark, tmp_path):
 
 
 def test_events_nanos_timestamp_readable(spark, sf_dir):
-    ev = read_table(spark, sf_dir, "events")
-    # naive parquet nanos → NTZ (session-timezone-independent rendering)
-    assert dict((f.name, f.dataType.simpleString()) for f in ev.schema.fields)[
-        "ts"
-    ] == "timestamp_ntz"
-    first = ev.orderBy("event_id").first()
-    assert first["ts"].year == 2024
+    # The second read is a schema-catalog hit; it must still convert.
+    for _ in range(2):
+        ev = read_table(spark, sf_dir, "events")
+        # naive parquet nanos → NTZ (session-timezone-independent rendering)
+        assert dict((f.name, f.dataType.simpleString()) for f in ev.schema.fields)[
+            "ts"
+        ] == "timestamp_ntz"
+        first = ev.orderBy("event_id").first()
+        assert first["ts"].year == 2024
+
+
+def test_nanos_parquet_converted_on_every_read(spark, tmp_path):
+    """An INT64 TIMESTAMP(NANOS) column reads as TIMESTAMP_NTZ at
+    microsecond precision both when inferred and on a catalog hit."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from self_healing_data_pipeline_spark.sources.readers import read_parquet
+
+    path = str(tmp_path / "ns.parquet")
+    ns = 1_704_067_200_123_456_789  # 2024-01-01 00:00:00.123456789
+    pq.write_table(
+        pa.table({"id": [1], "ts": pa.array([ns], pa.timestamp("ns"))}),
+        path,
+        version="2.6",
+    )
+    for _ in range(2):
+        df = read_parquet(spark, path)
+        assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+        assert df.first()["ts"] == datetime.datetime(2024, 1, 1, 0, 0, 0, 123456)
+
+
+def test_spark_written_timestamps_are_not_nanos(spark, tmp_path):
+    """Spark writes timestamps as INT96, which pyarrow reports as
+    timestamp[ns] unless coerced; they must read as plain timestamps."""
+    from self_healing_data_pipeline_spark.sources.readers import read_parquet
+
+    path = str(tmp_path / "ts.parquet")
+    src = spark.sql("SELECT 1 AS id, TIMESTAMP '2024-01-01 10:05:00' AS ts")
+    src.write.parquet(path)
+    df = read_parquet(spark, path)
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert df.collect() == src.collect()
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs submitted while ``fn()`` runs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_rewritten_in_place_is_read_fresh(spark, tmp_path):
+    """The schema catalog is keyed on the file listing: a table rewritten
+    at the same path (a new column and new rows) is inferred again."""
+    sf = str(tmp_path)
+    path = os.path.join(sf, "t.parquet")
+    spark.createDataFrame([(1, "a")], "id long, s string").write.parquet(path)
+    assert sorted(read_table(spark, sf, "t").collect()) == [(1, "a")]
+    assert read_table(spark, sf, "t").columns == ["id", "s"]  # catalog hit
+    spark.createDataFrame(
+        [(2, "b", 2.5), (3, "c", 3.5)], "id long, s string, x double"
+    ).write.mode("overwrite").parquet(path)
+    df = read_table(spark, sf, "t")
+    assert df.columns == ["id", "s", "x"]
+    assert sorted(df.collect()) == [(2, "b", 2.5), (3, "c", 3.5)]
+
+
+def test_committed_snapshot_resolves_without_a_job(spark, tmp_path):
+    """A snapshot this process committed is read with its recorded schema
+    (no inference job); a copy of it at a new path is inferred."""
+    import shutil
+
+    from self_healing_data_pipeline_spark.streaming.snapshots import (
+        commit_snapshot,
+        read_all_snapshots,
+        read_latest_snapshot,
+    )
+
+    state = str(tmp_path / "state")
+    df = spark.createDataFrame([(1, "a")], "id long, s string")
+    commit_snapshot(df, state, 0)
+    commit_snapshot(df, state, 1)
+    assert _jobs_in_group(
+        spark, "catalog-hit", lambda: read_latest_snapshot(spark, state).schema
+    ) == 0
+    assert _jobs_in_group(
+        spark, "catalog-hit-all", lambda: read_all_snapshots(spark, state).schema
+    ) == 0
+    copy = str(tmp_path / "copy")
+    shutil.copytree(state, copy)
+    assert _jobs_in_group(
+        spark, "catalog-miss", lambda: read_latest_snapshot(spark, copy).schema
+    ) > 0
+    assert sorted(read_all_snapshots(spark, state).collect()) == [(1, "a")] * 2
+
+
+def test_schema_catalog_is_bounded(tmp_path):
+    from pyspark.sql import types as T
+
+    from self_healing_data_pipeline_spark.sources import readers
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    paths = [
+        tmp_path / f"f{i}.parquet" for i in range(readers._SCHEMA_CATALOG_SIZE + 10)
+    ]
+    for p in paths:
+        p.write_bytes(b"x")
+        readers.record_schema(str(p), schema)
+        assert len(readers._SCHEMA_CATALOG) <= readers._SCHEMA_CATALOG_SIZE
+    assert readers.cataloged_schema(str(paths[0])) is None  # oldest evicted
+    assert readers.cataloged_schema(str(paths[-1])) == schema
+    paths[-1].write_bytes(b"yy")
+    assert readers.cataloged_schema(str(paths[-1])) is None  # listing changed
 
 
 def test_csv_quarantine_splits_good_and_malformed(spark, tmp_path):
