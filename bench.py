@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
@@ -23,10 +24,25 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def _git(cwd: str, *args: str) -> str | None:
+    """``git <args>`` stdout in ``cwd``, or None outside a git checkout."""
+    try:
+        out = subprocess.run(["git", *args], cwd=cwd, capture_output=True, text=True)
+    except OSError:
+        return None
+    return out.stdout.strip() if out.returncode == 0 else None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+
+    # The code this run measures, stamped in the per-key artifacts: the
+    # bench tripwire re-times suspects against the baseline's commit.
+    here = os.path.dirname(os.path.abspath(__file__))
+    head = _git(here, "rev-parse", "HEAD")
+    dirty = None if head is None else bool(_git(here, "status", "--porcelain"))
 
     import __spark_entry__ as entrymod
     from self_healing_data_pipeline_spark.session import get_spark
@@ -69,12 +85,10 @@ def main() -> None:
     # dead DataFrame handles.
     import gc
 
-    # Stamp hypervisor steal over the timed window (sandbox co-tenant
-    # truth): recorded in the repo-local per-key artifacts ONLY — the
-    # driver-facing final summary line keeps its exact shape. The
-    # tripwire (tests/test_bench_regression.py) uses the retime-window
-    # steal; this run-level number lets a human reading BENCH_PERKEY
-    # diffs tell a stolen run from a regression at a glance.
+    # Stamp hypervisor steal over the timed window: recorded in the
+    # repo-local per-key artifacts ONLY — the final summary line keeps
+    # its exact shape. It lets a human reading BENCH_PERKEY diffs tell a
+    # stolen run from a regression at a glance.
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
     try:
         from retime import steal_window
@@ -113,18 +127,18 @@ def main() -> None:
         # contaminated run is detectable after the fact (round-12
         # advisor item). Empty string when unset.
         "graft_conf": os.environ.get("SPARK_GRAFT_CONF", ""),
+        "commit": head,
+        "dirty": dirty,
     }
     # Full per-query detail first (stdout + file), compact summary LAST:
     # output-tail capture then always holds one complete ~100-byte JSON
     # object instead of the tail of a multi-KB line.
     print(json.dumps(full))
-    here = os.path.dirname(os.path.abspath(__file__))
-    # Two on-disk copies: bench_queries.json is the tripwire/retime
-    # working file (spliced by tools/retime.py), BENCH_PERKEY.json is
-    # the immutable per-round record — the driver's BENCH_r{N}.json
-    # truncates the per-key map, so per-key regression audits diff this
-    # file against tools/bench_baseline.json via tools/bench_diff.py
-    # (round-11 verdict task 4).
+    # Two on-disk copies: bench_queries.json is the tripwire's working
+    # file, BENCH_PERKEY.json is the immutable per-round record — a
+    # round's BENCH_r{N}.json truncates the per-key map, so per-key
+    # regression audits diff this file against tools/bench_baseline.json
+    # with `python tests/test_bench_regression.py OLD NEW`.
     for fname in ("bench_queries.json", "BENCH_PERKEY.json"):
         with open(os.path.join(here, fname), "w") as f:
             json.dump(full, f, indent=1)

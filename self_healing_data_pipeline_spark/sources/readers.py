@@ -160,15 +160,25 @@ def _entry(path: str, fingerprint: tuple) -> tuple | None:
     return entry[1:] if entry is not None and entry[0] == fingerprint else None
 
 
-def cataloged_schema(path: str) -> T.StructType | None:
-    """The recorded schema of ``path`` if its listing is unchanged."""
-    entry = _entry(path, listing_fingerprint(path))
+def cataloged_schema(
+    path: str, fingerprint: tuple | None = None
+) -> T.StructType | None:
+    """The schema recorded for ``path`` under ``fingerprint`` (default:
+    its listing now), else None."""
+    if fingerprint is None:
+        fingerprint = listing_fingerprint(path)
+    entry = _entry(path, fingerprint)
     return None if entry is None else entry[0]
 
 
-def record_schema(path: str, schema: T.StructType) -> None:
-    """Record ``schema`` (as Spark reads it) under ``path``'s listing now."""
-    _record(path, listing_fingerprint(path), schema, [])
+def record_schema(
+    path: str, schema: T.StructType, fingerprint: tuple | None = None
+) -> None:
+    """Record ``schema`` (as Spark reads it) under ``fingerprint``
+    (default: ``path``'s listing now)."""
+    if fingerprint is None:
+        fingerprint = listing_fingerprint(path)
+    _record(path, fingerprint, schema, [])
 
 
 def _record(

@@ -25,7 +25,9 @@ no other module builds that path.
   (``sources.readers``), keyed on the listing it just committed, and
   readers resolve schemas there: reading back a snapshot this process
   committed submits no schema-inference job, while a snapshot from an
-  earlier process (or one rewritten since) is inferred once.
+  earlier process (or one rewritten since) is inferred once, and so is
+  the union :func:`read_all_snapshots` reads over such epochs (recorded
+  under the listing of every epoch).
 * **Retain.** :func:`prune_snapshots` keeps the newest ``keep``
   committed epochs and never touches a directory above the newest
   committed one (a write that may still be in flight).
@@ -44,6 +46,7 @@ from pyspark.sql import types as T
 
 from self_healing_data_pipeline_spark.sources.readers import (
     cataloged_schema,
+    listing_fingerprint,
     read_parquet,
     record_schema,
 )
@@ -117,16 +120,29 @@ def read_all_snapshots(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Union of every committed epoch's snapshot (one scan over all of
     them), or None before the first commit — the read side of the
     per-epoch output stores. The schema is the recorded one when every
-    epoch has the same recorded schema; otherwise Spark infers it."""
+    epoch has the same recorded schema; otherwise Spark infers it once
+    per listing of its epochs."""
     epochs = committed_epochs(state_dir)
     if not epochs:
         return None
     paths = [_path(state_dir, e) for e in epochs]
-    schemas = [cataloged_schema(p) for p in paths]
-    reader = spark.read
+    # Listed before any inference: an epoch rewritten while the union is
+    # inferred then misses on the next call.
+    listings = [listing_fingerprint(p) for p in paths]
+    schemas = [cataloged_schema(p, fp) for p, fp in zip(paths, listings)]
     if schemas[0] is not None and all(s == schemas[0] for s in schemas):
-        reader = reader.schema(schemas[0])
-    return reader.parquet(*paths)
+        return spark.read.schema(schemas[0]).parquet(*paths)
+    # Epochs this process did not commit: the union is recorded under the
+    # store's epoch glob, keyed on every epoch's listing, and never under
+    # one epoch, whose own schema may differ from the union.
+    union_key = os.path.join(state_dir, "batch=*")
+    union_fp = tuple(zip(epochs, listings))
+    union = cataloged_schema(union_key, union_fp)
+    if union is not None:
+        return spark.read.schema(union).parquet(*paths)
+    out = spark.read.parquet(*paths)
+    record_schema(union_key, out.schema, union_fp)
+    return out
 
 
 def prune_snapshots(state_dir: str, keep: int = 2) -> list[int]:

@@ -1,385 +1,202 @@
-"""Per-query bench regression tripwire (round-3 judge task; mechanism
-hardened round 9, isolation fixed round 10, environment-calibrated
-later in round 10 — see the SENTINELS note for the multiplicative
-drift model both stages now normalize by).
+"""Per-query bench regression tripwire.
 
-The driver's 2x gate is on the suite TOTAL, so a single badly-regressed
-plan can hide inside a green total. This test compares the latest bench
-run (``bench_queries.json`` — written by ``python bench.py`` locally,
-and OVERWRITTEN by the driver's end-of-round run) against the frozen
-last-accepted reference (``tools/bench_baseline.json``).
+The headline bench metric is the suite total, where one regressed plan
+can hide. This test compares ``bench_queries.json`` (``python
+bench.py``) with ``tools/bench_baseline.json`` key by key.
 
-Rounds 6, 7, and 8 each ended with exactly one untouched key >1.5x in
-the driver's end-of-round run that an isolated re-time showed to be
-host-contention noise (±0.5-1.5 s run-to-run jitter under the ~380-query
-suite). A static threshold therefore can't distinguish "plan regressed"
-from "driver's run was noisy", so noise self-adjudicates:
+1. **Suspects.** Each key's run/baseline ratio is divided by the run's
+   median ratio, floored at 1.0 (a slower host is not a plan
+   regression); a key whose normalized time breaches :func:`_breaches`
+   is a suspect. So is the key nearest the median ratio among keys of
+   at least ``MIN_DELTA_SEC``: the check for a regression every key
+   shares, which the division hides.
+2. **Same-window A/B.** Each suspect is re-timed by ``tools/retime.py``
+   in ``PAIRS`` pairs of fresh subprocesses, one on the working tree and
+   one on the baseline's ``commit`` (``git archive`` to a temp dir,
+   ``--root``), alternating which runs first. Only the code differs
+   within a pair, so host speed cancels. A key is red when the median
+   per-pair tree/base ratio is >= ``THRESHOLD`` and the median per-pair
+   difference >= ``MIN_DELTA_SEC``, or when either side cannot run it.
+   The message quotes both sides' executed jobs/stages: a plan that
+   grew, or the same plan slower.
 
-1. **Suspect detection** stays sensitive: ratio >= 1.5x AND absolute
-   move >= 0.5 s AND either side >= 0.3 s. (An earlier draft ignored
-   keys where both sides were < 1 s; that would have made a genuine
-   0.15 s -> 0.95 s plan regression permanently invisible — review
-   finding. Sub-second suspects are cheap to adjudicate instead.)
-   Keys listed in the baseline's ``isolated_keys`` were frozen from an
-   isolated min-of-3 (systematically faster than contended suite runs),
-   so they get a protocol-aware threshold of 1.8x — see the provenance
-   rule in ``tools/retime.py``'s docstring.
-2. **Live re-time in a SUBPROCESS**: every suspect is re-timed in a
-   fresh process running ``tools/retime.py`` (min of 3 passes after the
-   standard bench warm-up) and fails ONLY if the isolated time still
-   breaches the same rule. A genuinely regressed plan re-times slow and
-   still fails; end-of-round contention noise re-times fast and the
-   tree stays green. The subprocess is load-bearing: ``getOrCreate()``
-   cannot change master at runtime, so an in-process call under pytest
-   inherits conftest's ``local[4]`` / 4-shuffle-partition session and
-   re-judges 32-core baselines on 4 cores (the round-9 false red on
-   q_multimodal_features: 2.21 s on 4 cores vs 1.40 s idle-32-core).
-   The retime JSON reports the actual ``sparkContext.master`` and this
-   test asserts it is the bench one; ``test_retime_subprocess_is_isolated``
-   pins the property even on rounds with no suspects.
-3. **Invalid-measurement guard (round-11, the co-tenant fix)**: an
-   isolated min-of-3 can only be <= the contended suite-run time for
-   the same plan — if a suspect's isolated re-time lands ABOVE its
-   suite-run time (x ISOLATION_SANITY slack), the RETIME window itself
-   was contended (the round-10 judge red: isolated 3.70 s > suite
-   1.99 s, caused by a concurrent Spark session on the host). The test
-   re-runs the re-time ONCE; if the inconsistency persists it SKIPS
-   with a recorded warning instead of failing — a contended host can
-   delay adjudication, never turn the tree red. Genuine regressions
-   are unaffected: they re-time slow but BELOW their suite time, so
-   they still fail. Complementing this, ``tools/retime.py`` now
-   interleaves sentinel passes with suspect passes (same measurement
-   window), and when the sentinels themselves show >1.5x drift the
-   2.0x calibration cap is lifted — demonstrated in-window contention
-   is environment, not plan.
+Baseline refresh: ``python bench.py`` on a clean tree (it records
+``"dirty": false`` and its ``commit``), then ``cp bench_queries.json
+tools/bench_baseline.json``.
 
-BASELINE REFRESH PROCEDURE (round-10 rule, applied from r10 on) — the
-ORDER matters (review finding: the reverse order lets the cp clobber
-the spliced values and tags): FIRST accept the clean idle-host suite
-run via ``cp bench_queries.json tools/bench_baseline.json``, THEN
-re-time every key that moved materially (>1.3x in either direction AND
->=0.3 s absolute) through ``python tools/retime.py --patch-baseline
-<keys>``, which splices the isolated min-of-3 into the fresh baseline
-and tags the key in ``isolated_keys``. This stops a single lucky suite run from
-setting an unbeatable floor (the r8 q_multimodal_features 1.43 s trap —
-its natural band is 1.4-3.0 s) and keeps the baseline's mixed protocols
-explicit instead of silent.
+``python tests/test_bench_regression.py OLD.json NEW.json`` prints the
+stage-1 report for two bench files.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
-import warnings
+import tempfile
 
 import pytest
 
-HERE = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(HERE)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 THRESHOLD = 1.5
-ISOLATED_THRESHOLD = 1.8  # baseline frozen from isolated min-of-3 (faster)
 NOISE_FLOOR_SEC = 0.3  # sub-0.3s on both sides: scheduler jitter only
 MIN_DELTA_SEC = 0.5  # a regression must also move this much wall time
-
-#: ENVIRONMENT CALIBRATION (round-10 second fix to this mechanism).
-#: Host speed is not constant: the same tree measured suite totals of
-#: 333-408 s across one day with identical plans, and a retime
-#: subprocess that runs beside pytest's resident JVM lands ~1.4x
-#: pessimistic vs a truly idle retime (measured: q_impute_missing
-#: 1.64 s direct vs 2.45 s under pytest — same code, same session
-#: config). Under a MULTIPLICATIVE environment model, a uniformly slow
-#: run inflates every key by the same factor while a genuine plan
-#: regression inflates one key on top of it — so both stages normalize:
-#: stage 1 divides each suite ratio by the run's MEDIAN ratio over all
-#: common keys (384 keys: one regressed plan cannot move the median),
-#: and stage 2 re-times these stable SENTINEL keys in the same
-#: subprocess and divides each suspect's isolated ratio by the median
-#: sentinel drift. A true 1.5x regression on a 1.4x-slow host shows
-#: raw 2.1x and corrected 1.5x — still caught; calibration can only
-#: absorb what affects every key equally. Guard rails (second review
-#: pass): (a) sentinel baselines must be ISOLATED-tagged so
-#: fresh/baseline is protocol-matched drift, not drift times the
-#: suite-vs-isolated protocol skew; (b) cal clamps to >= 1.0 (a fast
-#: environment never hides a regression) and stage-2 cal caps at 2.0
-#: (the measured co-residency factor is ~1.4-1.5 — a larger "drift"
-#: is more likely a sentinel's own problem than the environment);
-#: (c) if the run's MEDIAN ratio itself exceeds SUITE_CAL_LIMIT the
-#: test FAILS with a distinct message instead of normalizing — a
-#: global regression (session default, shuffle config) moves the
-#: median exactly like a horrible host day, and this estimator cannot
-#: tell them apart, so neither is silently absorbed; (d) a sentinel
-#: that is itself a suspect is excluded from CALIBRATION (it still
-#: gets judged in `live`, calibrated by the remaining sentinels).
-SENTINELS = ("q_agg_groupby", "q_join_inner", "q_window_frame")
-SUITE_CAL_LIMIT = 1.75
-RETIME_CAL_LIMIT = 2.0
-#: Sentinel drift above this proves in-window contention (sentinel
-#: passes are interleaved with suspect passes in tools/retime.py), so
-#: the RETIME_CAL_LIMIT cap is lifted — see docstring point 3.
-SENTINEL_CONTENTION = 1.5
-#: Isolation sanity: an isolated min-of-3 landing above suite_run x
-#: this factor is physically inconsistent (isolation can only remove
-#: contention) -> the retime window itself was contended.
-ISOLATION_SANITY = 1.05
-#: Hypervisor steal (%) measured over the retime window above which the
-#: window is proven externally contended: the host ran a co-tenant
-#: while our vCPUs wanted to run. Sentinel calibration cannot see this
-#: case when the co-tenant load is bursty or preferentially hits
-#: sustained all-core work (long Python-worker stages) over short JVM
-#: bursts — round-12 observed 10.9% steal under load with sentinels
-#: re-timing at 1.0x while two Python-heavy keys stayed 1.6-1.7x. A
-#: quiet host shows ~0-1%, so this gate is inert exactly when a red
-#: verdict is trustworthy. Steal can only DEFER a red (invalid-window,
-#: re-run/skip path) — never turn one green.
-STEAL_CONTENTION_PCT = 5.0
+PAIRS = 3
 
 
-def _load(path: str) -> tuple[dict[str, float], set[str]]:
+def _load(path: str) -> dict:
     with open(path) as f:
         data = json.load(f)
-    if isinstance(data.get("parsed"), dict):
-        data = data["parsed"]
-    return (
-        {k: float(v) for k, v in data["queries"].items()},
-        set(data.get("isolated_keys", [])),
-    )
+    if not isinstance(data.get("queries"), dict):
+        raise ValueError(f"{path}: no 'queries' dict found")
+    return data
 
 
-def _breaches(old: float, new: float, threshold: float = THRESHOLD) -> bool:
+def _times(data: dict) -> dict[str, float]:
+    return {k: float(v) for k, v in data["queries"].items()}
+
+
+def _breaches(old: float, new: float) -> bool:
     return (
         max(old, new) >= NOISE_FLOOR_SEC
         and old > 0
-        and new / old >= threshold
+        and new / old >= THRESHOLD
         and new - old >= MIN_DELTA_SEC
     )
 
 
-def _run_retime(extra_args: list[str], timeout: int) -> dict:
-    """Run tools/retime.py in a FRESH process (fresh JVM -> bench session,
-    local[$SPARK_GRAFT_CPUS]); parse the last stdout line as JSON and
-    assert the session really is the bench one, not an inherited test
-    session."""
+def _stage1(
+    baseline: dict[str, float], current: dict[str, float]
+) -> tuple[list[str], str | None, float]:
+    """``(suspects, median_key, median_ratio)`` of a bench run."""
+    common = sorted(k for k in set(baseline) & set(current) if baseline[k] > 0)
+    ratio = {k: current[k] / baseline[k] for k in common}
+    if not ratio:
+        return [], None, 1.0
+    med = statistics.median(ratio.values())
+    cal = max(1.0, med)
+    suspects = [k for k in ratio if _breaches(baseline[k], current[k] / cal)]
+    long_keys = [k for k in ratio if baseline[k] >= MIN_DELTA_SEC]
+    median_key = min(long_keys, key=lambda k: abs(ratio[k] - med), default=None)
+    return suspects, median_key, med
+
+
+def _judge(pairs: list[tuple[dict, dict]], keys: list[str]) -> dict[str, str]:
+    """Red key -> reason, from ``PAIRS`` (tree, base) retime outputs."""
+    red: dict[str, str] = {}
+    for k in keys:
+        failed = [
+            f"{side} tree cannot run it: {info['failed'][k]}"
+            for pair in pairs
+            for side, info in zip(("working", "base"), pair)
+            if k in info["failed"]
+        ]
+        if failed:
+            red[k] = failed[0]
+            continue
+        tree = [t["queries"][k] for t, _ in pairs]
+        base = [b["queries"][k] for _, b in pairs]
+        ratio = statistics.median(t / b for t, b in zip(tree, base))
+        delta = statistics.median(t - b for t, b in zip(tree, base))
+        if ratio >= THRESHOLD and delta >= MIN_DELTA_SEC:
+            tree_c, base_c = pairs[0][0]["counts"][k], pairs[0][1]["counts"][k]
+            grew = any(t > b for t, b in zip(tree_c, base_c))
+            red[k] = (
+                f"tree {tree} s vs base {base} s: median {ratio:.2f}x, "
+                f"+{delta:.2f} s; jobs/stages tree {tree_c} base {base_c} "
+                f"({'the plan grew' if grew else 'no more jobs or stages ran'})"
+            )
+    return red
+
+
+def _run_retime(args: list[str], root: str = REPO) -> dict:
+    """Run tools/retime.py in a FRESH process (fresh JVM, bench session,
+    local[$SPARK_GRAFT_CPUS]) on the checkout at ``root``; parse its
+    last stdout line and check it ran the bench session on ``root``."""
     proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "retime.py"), *extra_args],
+        [sys.executable, os.path.join(REPO, "tools", "retime.py"), *args],
         capture_output=True,
         text=True,
-        timeout=timeout,
-        cwd=REPO,
+        cwd=root,
     )
     assert proc.returncode == 0, (
-        f"tools/retime.py failed (rc={proc.returncode}):\n"
+        f"tools/retime.py failed (rc={proc.returncode}) on {root}:\n"
         f"stdout tail: {proc.stdout[-2000:]}\nstderr tail: {proc.stderr[-2000:]}"
     )
-    lines = [ln for ln in proc.stdout.strip().splitlines() if ln.strip()]
-    info = json.loads(lines[-1])
+    info = json.loads(proc.stdout.strip().splitlines()[-1])
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    assert info["master"] == f"local[{cpus}]", (
-        f"retime subprocess ran on master={info['master']!r}, expected "
-        f"local[{cpus}] — adjudication on the wrong session is the round-9 "
-        "false-red bug"
-    )
+    assert info["master"] == f"local[{cpus}]", f"inherited session: {info}"
+    assert os.path.realpath(info["root"]) == os.path.realpath(root), info
     return info
 
 
-def _stage2_judge(
-    live: list[str],
-    suspects: dict[str, tuple[float, float]],
-    baseline: dict[str, float],
-    fresh: dict[str, float],
-    sentinels: list[str],
-    suite_sentinel_drift: float | None = None,
-    steal_pct: float | None = None,
-) -> tuple[dict, dict, float]:
-    """Pure stage-2 judgment over one retime window. Returns
-    ``(regressed, invalid, retime_cal)``:
-
-    - ``regressed``: still breaches after calibration AND the isolated
-      time is consistent (<= suite_run x ISOLATION_SANITY) — a real
-      plan regression, the caller must fail.
-    - ``invalid``: still breaches but the isolated time EXCEEDS the
-      contended suite-run time — physically impossible under isolation,
-      so the retime window itself was contended; the caller re-runs
-      once and then skips (never fails) on persistence.
-    - ``retime_cal``: the sentinel drift factor applied. Capped at
-      RETIME_CAL_LIMIT under normal conditions; the cap is LIFTED when
-      drift > SENTINEL_CONTENTION — but ONLY with corroboration
-      (round-11 advisor item): interleaved sentinel drift proves the
-      slowdown is in-window, yet a GLOBAL regression (shared operator
-      or session-default change) also slows sentinels in the isolated
-      subprocess and must not be normalized away. The discriminator is
-      ``suite_sentinel_drift`` — the sentinels' ratios in the SUITE run
-      that raised the suspects: window-local contention leaves the
-      suite ratios inside the normal protocol-skew band
-      (<= ISOLATED_THRESHOLD vs their isolated baselines), while a
-      global regression inflates suite and window alike. With no suite
-      corroboration available the cap stays (conservative: worst case a
-      re-run / invalid-window classification, never a silent pass).
-    """
-    raw_drift = (
-        statistics.median([fresh[s] / baseline[s] for s in sentinels])
-        if sentinels
-        else 1.0
-    )
-    contention_corroborated = (
-        suite_sentinel_drift is not None
-        and suite_sentinel_drift <= ISOLATED_THRESHOLD
-    )
-    if raw_drift > SENTINEL_CONTENTION and contention_corroborated:
-        retime_cal = max(1.0, raw_drift)
-    else:
-        retime_cal = min(RETIME_CAL_LIMIT, max(1.0, raw_drift))
-    # Stage 2 always uses the BASE threshold: the isolated re-time is
-    # protocol-matched (or generous) against either baseline kind —
-    # isolated-vs-isolated for tagged keys, isolated-vs-suite (faster
-    # side) for untagged — so the 1.8x protocol-skew slack of stage 1
-    # would here let a genuine 1.6x regression on a tagged key ship
-    # (review finding).
-    regressed: dict[str, dict] = {}
-    invalid: dict[str, dict] = {}
-    for k in live:
-        base, suite_run = suspects[k]
-        if not _breaches(base, fresh[k] / retime_cal, THRESHOLD):
-            continue
-        rec = {
-            "baseline": base,
-            "suite_run": suite_run,
-            "isolated_retime": fresh[k],
-            "environment_cal": round(retime_cal, 3),
-        }
-        if fresh[k] > suite_run * ISOLATION_SANITY:
-            invalid[k] = rec
-        elif steal_pct is not None and steal_pct > STEAL_CONTENTION_PCT:
-            # The retime window itself was externally contended —
-            # /proc/stat charged >STEAL_CONTENTION_PCT of the window's
-            # CPU time to the hypervisor running someone else. A "still
-            # breaching" verdict measured under proven steal is not
-            # adjudicable (sentinels may calibrate clean when the
-            # co-tenant burst hits sustained all-core work but not the
-            # short JVM sentinels). Defer: the caller's re-run/skip
-            # path re-measures, and a real regression still reds on
-            # the next quiet host run.
-            invalid[k] = {**rec, "steal_pct": steal_pct}
-        else:
-            regressed[k] = rec
-    return regressed, invalid, retime_cal
+def _ab(keys: list[str], commit: str) -> list[tuple[dict, dict]]:
+    """``PAIRS`` (tree, base) retime outputs, the base being ``commit``."""
+    with tempfile.TemporaryDirectory() as tmp:
+        base_root = os.path.join(tmp, "base")
+        tar = os.path.join(tmp, "base.tar")
+        subprocess.run(["git", "archive", "-o", tar, commit], cwd=REPO, check=True)
+        shutil.unpack_archive(tar, base_root)
+        roots = (REPO, base_root)
+        pairs = []
+        for i in range(PAIRS):
+            info = {}
+            for root in roots if i % 2 == 0 else roots[::-1]:
+                extra = [] if root == REPO else ["--root", root]
+                info[root] = _run_retime([*extra, *keys], root)
+            pairs.append((info[REPO], info[base_root]))
+    return pairs
 
 
 def test_retime_subprocess_is_isolated():
-    """The adjudication mechanism itself: a retime subprocess must get a
-    fresh bench-config JVM (local[$SPARK_GRAFT_CPUS]) even while pytest
-    owns a local[4] session in THIS process. --probe starts the session
-    and reports master without timing any query."""
-    _run_retime(["--probe"], timeout=300)
+    """A retime subprocess must get a fresh bench-config JVM
+    (local[$SPARK_GRAFT_CPUS]) even while pytest owns a local[4] session
+    in THIS process. --probe starts the session and reports master
+    without timing any query."""
+    _run_retime(["--probe"])
 
 
-def test_stage2_judge_seeded_regression_still_reds():
-    """Deterministic pin of the round-11 done-bar: a seeded 2x slowdown
-    of one key must remain RED through every escape hatch — it is not
-    absorbed by sentinel calibration (sentinels near 1.0) and not
-    reclassified as an invalid measurement (its isolated time sits
-    below its suite time, as real regressions do)."""
-    baseline = {"q_x": 1.0, "q_agg_groupby": 0.5, "q_join_inner": 0.4}
-    suspects = {"q_x": (1.0, 2.2)}
-    fresh = {"q_x": 2.0, "q_agg_groupby": 0.52, "q_join_inner": 0.41}
-    regressed, invalid, cal = _stage2_judge(
-        ["q_x"], suspects, baseline, fresh, ["q_agg_groupby", "q_join_inner"]
-    )
-    assert list(regressed) == ["q_x"] and not invalid and cal < 1.1
+def _info(queries: dict[str, float], failed: dict | None = None) -> dict:
+    """A retime output line: ``queries`` timed, ``failed`` not run."""
+    return {"queries": queries, "counts": dict.fromkeys(queries, [3, 5]),
+            "failed": failed or {}}
 
 
-def test_stage2_judge_contended_window_is_invalid_not_red():
-    """The round-10 judge red, replayed: isolated 3.70 s ABOVE the
-    contended suite run's 1.99 s (baseline 0.85 s). Must classify as
-    invalid-measurement (re-run/skip path), never regressed."""
-    baseline = {"q_x": 0.85, "q_agg_groupby": 0.5, "q_join_inner": 0.4}
-    suspects = {"q_x": (0.85, 1.99)}
-    fresh = {"q_x": 3.70, "q_agg_groupby": 0.55, "q_join_inner": 0.44}
-    regressed, invalid, _ = _stage2_judge(
-        ["q_x"], suspects, baseline, fresh, ["q_agg_groupby", "q_join_inner"]
-    )
-    assert list(invalid) == ["q_x"] and not regressed
+def test_judge_seeded_regression_is_red():
+    times = ((2.1, 1.0), (1.9, 1.05), (2.0, 0.95))
+    red = _judge([(_info({"q_x": t}), _info({"q_x": b})) for t, b in times], ["q_x"])
+    assert list(red) == ["q_x"] and "no more jobs or stages ran" in red["q_x"]
 
 
-def test_stage2_judge_cap_lifts_under_proven_contention():
-    """Sentinels >1.5x drifted in-window AND clean in the suite run
-    (the contention signature) lift the 2.0x cap: a suspect inflated
-    2.5x by the same contention calibrates clean instead of red."""
-    baseline = {"q_x": 1.0, "q_agg_groupby": 0.5, "q_join_inner": 0.4}
-    suspects = {"q_x": (1.0, 2.6)}
-    # everything — sentinels and suspect alike — is ~2.5x under load
-    fresh = {"q_x": 2.5, "q_agg_groupby": 1.25, "q_join_inner": 1.0}
-    # suite_run 2.6 >= fresh 2.5 so not "invalid"; cal = 2.5 (lifted)
-    regressed, invalid, cal = _stage2_judge(
-        ["q_x"], suspects, baseline, fresh, ["q_agg_groupby", "q_join_inner"],
-        suite_sentinel_drift=1.1,
-    )
-    assert not regressed and not invalid and cal == 2.5
-    # ...but a key regressed ON TOP of that contention still reds:
-    fresh2 = {"q_x": 6.0, "q_agg_groupby": 1.25, "q_join_inner": 1.0}
-    regressed2, _, _ = _stage2_judge(
-        ["q_x"], {"q_x": (1.0, 6.2)}, baseline, fresh2,
-        ["q_agg_groupby", "q_join_inner"],
-        suite_sentinel_drift=1.1,
-    )
-    assert list(regressed2) == ["q_x"]
+def test_key_equal_on_both_sides_is_green_however_far_it_breached():
+    baseline = {f"q_{i}": 1.0 for i in range(9)} | {"q_x": 1.0}
+    current = dict(baseline, q_x=10.0)
+    suspects, _, _ = _stage1(baseline, current)
+    assert suspects == ["q_x"]
+    pairs = [(_info({"q_x": t}), _info({"q_x": t})) for t in (1.3, 1.1, 1.2)]
+    assert _judge(pairs, suspects) == {}
 
 
-def test_stage2_judge_global_regression_not_normalized_away():
-    """r11 advisor item: a change that slows the sentinels >1.5x in the
-    isolated window AND in the suite run (global regression — shared
-    operator / session default) must NOT lift the cap: the suspect
-    stays red instead of being calibrated away as 'environment'."""
-    baseline = {"q_x": 1.0, "q_agg_groupby": 0.5, "q_join_inner": 0.4}
-    suspects = {"q_x": (1.0, 3.1)}
-    # sentinels 2.5x slow in the window; the suspect 3.0x — under a
-    # LIFTED cal of 2.5 it would calibrate to 1.2x and ship
-    fresh = {"q_x": 3.0, "q_agg_groupby": 1.25, "q_join_inner": 1.0}
-    # suite sentinel ratios ~2.5x too: the slowdown predates the window
-    regressed, invalid, cal = _stage2_judge(
-        ["q_x"], suspects, baseline, fresh, ["q_agg_groupby", "q_join_inner"],
-        suite_sentinel_drift=2.5,
-    )
-    assert cal == RETIME_CAL_LIMIT  # capped, not lifted
-    assert list(regressed) == ["q_x"] and not invalid
-    # ...and with no suite corroboration at all, stay conservative:
-    regressed2, _, cal2 = _stage2_judge(
-        ["q_x"], suspects, baseline, fresh, ["q_agg_groupby", "q_join_inner"],
-    )
-    assert cal2 == RETIME_CAL_LIMIT and list(regressed2) == ["q_x"]
+def test_global_regression_reds_the_median_key():
+    """Every key 2x slower: stage 1 normalizes all of them away, and the
+    A/B of the key at the median ratio reds the tree."""
+    baseline = {f"q_{i}": 0.2 + 0.3 * i for i in range(9)}
+    current = {k: 2 * v for k, v in baseline.items()}
+    suspects, median_key, med = _stage1(baseline, current)
+    assert suspects == [] and med == 2.0
+    b = baseline[median_key]
+    assert b >= MIN_DELTA_SEC
+    pairs = [(_info({median_key: 2 * b}), _info({median_key: b}))] * PAIRS
+    assert list(_judge(pairs, [median_key])) == [median_key]
 
 
-def test_stage2_judge_steal_defers_red_but_never_greens():
-    """A retime window with proven hypervisor steal (>5% of the
-    window's CPU time charged to co-tenants) cannot produce a RED
-    verdict — the breaching key defers to the invalid/re-run path with
-    the steal evidence attached. Below the threshold the same numbers
-    stay red, and a key that calibrates clean is green regardless of
-    steal (the gate only reclassifies reds)."""
-    baseline = {"q_py": 1.0, "q_agg_groupby": 0.5, "q_join_inner": 0.4}
-    suspects = {"q_py": (1.0, 1.9)}
-    # sentinels clean (short JVM bursts dodge the co-tenant), suspect
-    # 1.7x — the exact round-12 signature under 10.9% measured steal
-    fresh = {"q_py": 1.7, "q_agg_groupby": 0.5, "q_join_inner": 0.4}
-    sents = ["q_agg_groupby", "q_join_inner"]
-    regressed, invalid, _ = _stage2_judge(
-        ["q_py"], suspects, baseline, fresh, sents, steal_pct=10.9
-    )
-    assert not regressed and list(invalid) == ["q_py"]
-    assert invalid["q_py"]["steal_pct"] == 10.9
-    # quiet host: same numbers must stay red
-    regressed2, invalid2, _ = _stage2_judge(
-        ["q_py"], suspects, baseline, fresh, sents, steal_pct=0.4
-    )
-    assert list(regressed2) == ["q_py"] and not invalid2
-    # and steal never flips a passing key either way
-    fresh_ok = {"q_py": 1.1, "q_agg_groupby": 0.5, "q_join_inner": 0.4}
-    regressed3, invalid3, _ = _stage2_judge(
-        ["q_py"], suspects, baseline, fresh_ok, sents, steal_pct=10.9
-    )
-    assert not regressed3 and not invalid3
+def test_key_the_base_tree_cannot_run_is_reported():
+    pairs = [(_info({"q_new": 0.4}), _info({}, {"q_new": "KeyError: 'q_new'"}))]
+    red = _judge(pairs * PAIRS, ["q_new"])
+    assert "base tree cannot run it" in red["q_new"]
 
 
 def test_retime_reports_steal_pct():
@@ -401,127 +218,40 @@ def test_retime_reports_steal_pct():
 
 def test_no_per_query_bench_regression():
     current_path = os.path.join(REPO, "bench_queries.json")
-    baseline_path = os.path.join(REPO, "tools", "bench_baseline.json")
     if not os.path.exists(current_path):
         pytest.skip("no bench_queries.json — run `python bench.py` first")
-    current, _ = _load(current_path)
-    baseline, isolated = _load(baseline_path)
-    common = sorted(set(baseline) & set(current))
-    ratios = [current[k] / baseline[k] for k in common if baseline[k] > 0]
-    if not ratios:
+    base_data = _load(os.path.join(REPO, "tools", "bench_baseline.json"))
+    assert not base_data.get("dirty"), "the baseline came from a dirty tree"
+    current = _times(_load(current_path))
+    suspects, median_key, _ = _stage1(_times(base_data), current)
+    if median_key is None:
         pytest.skip("bench_queries.json shares no keys with the baseline")
-    # Stage-1 environment factor: the run's median ratio (see SENTINELS
-    # note — uniform host drift is not a plan regression, and one
-    # regressed plan cannot move the median of ~384 keys). A median
-    # above SUITE_CAL_LIMIT *could* be a global regression — but it is
-    # also what a catastrophically contended bench run looks like, so
-    # (round-11, advisor item) it routes through a sentinel-only
-    # isolated re-time instead of hard-failing: sentinels re-timing
-    # near their baselines prove the PLANS are fine (bad host day ->
-    # normalize and continue); sentinels re-timing slow in an idle
-    # subprocess corroborate a real global regression -> fail.
-    med = statistics.median(ratios)
-    if med > SUITE_CAL_LIMIT:
-        probe_sents = [s for s in SENTINELS if s in baseline and s in isolated]
-        sent_drift = float("inf")
-        if probe_sents:
-            info = _run_retime(probe_sents, timeout=120 + 180 * len(probe_sents))
-            sent_drift = statistics.median(
-                [info["queries"][s] / baseline[s] for s in probe_sents]
-            )
-        assert sent_drift <= SENTINEL_CONTENTION, (
-            f"the run's MEDIAN per-query ratio is {med:.2f}x AND the "
-            f"sentinel keys re-time {sent_drift:.2f}x slow in an isolated "
-            "subprocess — that is a GLOBAL regression (session default, "
-            "shuffle config), not host drift; refusing to normalize it away"
-        )
-        warnings.warn(
-            f"bench run median ratio {med:.2f}x exceeds SUITE_CAL_LIMIT but "
-            f"sentinels re-time clean ({sent_drift:.2f}x) — treating as a "
-            "degraded-host bench run and normalizing; re-run `python "
-            "bench.py` idle for a trustworthy bench_queries.json"
-        )
-    suite_cal = max(1.0, med)
-    suspects = {
-        k: (baseline[k], current[k])
-        for k in common
-        if _breaches(
-            baseline[k],
-            current[k] / suite_cal,
-            ISOLATED_THRESHOLD if k in isolated else THRESHOLD,
-        )
-    }
-    if not suspects:
-        return
-    from self_healing_data_pipeline_spark import registry
+    keys = sorted(set(suspects) | {median_key})
+    red = _judge(_ab(keys, base_data["commit"]), keys)
+    assert not red, (
+        f"queries slower on the working tree than on the baseline commit "
+        f"{base_data['commit']} in a same-window A/B: {red} — compare the "
+        "bench files with `python tests/test_bench_regression.py "
+        "tools/bench_baseline.json bench_queries.json`; refresh the "
+        "baseline only after accepting the regression"
+    )
 
-    registry.load_all()
-    live = sorted(k for k in suspects if k in registry.QUERIES)
-    stale = sorted(k for k in suspects if k not in registry.QUERIES)
-    assert not stale, (
-        f"bench JSON files contain keys no longer in the registry: "
-        f"{stale} — re-run `python bench.py` and refresh "
-        "tools/bench_baseline.json"
-    )
-    # Self-adjudicate in a SUBPROCESS (fresh JVM, bench session) — never
-    # in-process, which would inherit conftest's local[4] session.
-    # Sentinels ride along for stage-2 calibration, their passes
-    # INTERLEAVED with the suspects' by tools/retime.py so the drift
-    # estimate covers the suspects' own measurement window. (A suspect
-    # sentinel is excluded from CALIBRATION and judged in `live` like
-    # any other suspect, calibrated by the remaining sentinels.)
-    # Protocol match: only isolated-TAGGED sentinel baselines may
-    # calibrate — a suite-protocol baseline would fold the
-    # suite-vs-isolated skew into the "drift" and mis-correct.
-    sentinels = [
-        s
-        for s in SENTINELS
-        if s not in suspects
-        and s in baseline
-        and s in isolated
-        and s in registry.QUERIES
-    ]
-    # Suite-side sentinel drift corroborates (or refutes) any in-window
-    # contention claim: see _stage2_judge's docstring.
-    suite_sentinel_drift = (
-        statistics.median([current[s] / baseline[s] for s in sentinels])
-        if sentinels
-        else None
-    )
-    regressed: dict[str, dict] = {}
-    invalid: dict[str, dict] = {}
-    pending = list(live)
-    for attempt in range(2):  # one re-run on an invalid window
-        info = _run_retime(
-            pending + sentinels, timeout=120 + 180 * (len(pending) + len(sentinels))
-        )
-        regressed, invalid, _ = _stage2_judge(
-            pending, suspects, baseline, info["queries"], sentinels,
-            suite_sentinel_drift=suite_sentinel_drift,
-            steal_pct=info.get("steal_pct"),
-        )
-        if not invalid:
-            break
-        # An inconsistent window taints its "regressed" verdicts too
-        # (the same contention that inflated the invalid keys may have
-        # inflated them) — re-measure everything still breaching.
-        pending = sorted(set(regressed) | set(invalid))
-    assert not regressed, (
-        f"queries regressed vs tools/bench_baseline.json even after "
-        f"isolated min-of-3 subprocess re-time (sentinel-calibrated): "
-        f"{regressed} — investigate "
-        "with tools/bench_diff.py; refresh the baseline only after accepting "
-        "(volatile keys: tools/retime.py --patch-baseline)"
-    )
-    if invalid:
-        warnings.warn(
-            "bench tripwire: isolated re-times persistently exceeded the "
-            f"contended suite-run times for {sorted(invalid)} — physically "
-            "impossible under isolation, so the host is under sustained "
-            "co-tenant load; adjudication deferred (re-run pytest on an "
-            f"idle host). Details: {invalid}"
-        )
-        pytest.skip(
-            f"retime window contended twice for {sorted(invalid)}; "
-            "cannot adjudicate on this host right now"
-        )
+
+def main(old_path: str, new_path: str) -> None:
+    """Print the stage-1 report of NEW against OLD."""
+    old, new = _times(_load(old_path)), _times(_load(new_path))
+    suspects, median_key, med = _stage1(old, new)
+    improved = [k for k in sorted(set(old) & set(new)) if _breaches(new[k], old[k])]
+    print(f"median ratio {med:.2f}x (key {median_key})")
+    for title, keys in (("suspects", suspects), ("improved", improved)):
+        print(f"{title}: {len(keys)}")
+        for k in keys:
+            print(f"  {k}: {old[k]:.2f}s -> {new[k]:.2f}s ({new[k] / old[k]:.2f}x)")
+    print(f"only in NEW: {sorted(set(new) - set(old))}")
+    print(f"only in OLD: {sorted(set(old) - set(new))}")
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        raise SystemExit(__doc__)
+    main(sys.argv[1], sys.argv[2])

@@ -5,6 +5,7 @@ rejection, empty-input guard) — FIXTURES.md §2 scenarios."""
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 
@@ -15,6 +16,9 @@ from self_healing_data_pipeline_spark.sources.readers import (
     read_json,
     read_table,
 )
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+from retime import run_counted  # noqa: E402
 
 MESSY_CSV = """cust_id,full_name,email,signup_date,balance,is_active,notes
 1,Alice Smith,alice@example.com,2024-01-15,1203.50,true,
@@ -148,13 +152,7 @@ def test_spark_written_timestamps_are_not_nanos(spark, tmp_path):
 
 def _jobs_in_group(spark, group, fn):
     """Spark jobs submitted while ``fn()`` runs under job group ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return run_counted(spark, fn, group)[0]
 
 
 def test_table_rewritten_in_place_is_read_fresh(spark, tmp_path):
@@ -200,6 +198,40 @@ def test_committed_snapshot_resolves_without_a_job(spark, tmp_path):
         spark, "catalog-miss", lambda: read_latest_snapshot(spark, copy).schema
     ) > 0
     assert sorted(read_all_snapshots(spark, state).collect()) == [(1, "a")] * 2
+
+
+def test_copied_snapshots_union_inferred_once_per_listing(spark, tmp_path):
+    """Epochs another process committed: ``read_all_snapshots`` infers
+    their union once per listing of the store, and again once an epoch
+    is rewritten."""
+    import shutil
+
+    from self_healing_data_pipeline_spark.streaming.snapshots import (
+        commit_snapshot,
+        read_all_snapshots,
+    )
+
+    state = str(tmp_path / "state")
+    for e in range(3):
+        df = spark.createDataFrame([(e, "a")], "id long, s string")
+        commit_snapshot(df, state, e)
+    copy = str(tmp_path / "copy")
+    shutil.copytree(state, copy)
+
+    def read():
+        return read_all_snapshots(spark, copy).schema
+
+    assert _jobs_in_group(spark, "union-miss", read) == 1
+    assert _jobs_in_group(spark, "union-hit", read) == 0
+    spark.createDataFrame([(9, "b")], "id long, s string").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(copy, "batch=1"))
+    assert _jobs_in_group(spark, "union-rewritten", read) == 1
+    assert sorted(read_all_snapshots(spark, copy).collect()) == [
+        (0, "a"),
+        (2, "a"),
+        (9, "b"),
+    ]
 
 
 def test_schema_catalog_is_bounded(tmp_path):

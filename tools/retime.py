@@ -1,93 +1,40 @@
-"""Isolated re-time of specific bench keys (tripwire adjudication).
-
-The per-round ~380-query bench runs under whatever host contention the
-driver's end-of-round environment has; individual keys show ±0.5-1.5 s
-run-to-run jitter unrelated to their plans (rounds 6-8 each ended with
-one untouched key >1.5x purely from this). The adjudication rule
-(tests/test_bench_regression.py docstring) is: re-time the key in an
-IDLE session, min of N>=3 passes after the standard bench warm-up, and
-treat that as the key's true steady-state time.
-
-ISOLATION CONTRACT (round-10 fix): this script must be run as a
-SUBPROCESS, never imported and called inside a process that already
-owns a SparkSession. ``getOrCreate()`` cannot change master at runtime,
-so an in-process call under pytest inherits the ``local[4]`` /
-4-shuffle-partition test session and re-judges 32-core baselines on 4
-cores (the round-9 red tree). The emitted JSON therefore includes the
-actual ``sparkContext.master`` so callers can assert the session is the
-bench one; the tripwire invokes this file via ``subprocess.run`` and
-checks it.
-
-BASELINE PROVENANCE RULE (round-10): ``tools/bench_baseline.json`` is
-refreshed from a clean, idle-host full-suite run (``cp
-bench_queries.json tools/bench_baseline.json``) — EXCEPT volatile keys.
-Any key whose fresh suite time moved MATERIALLY vs the previous
-baseline — >1.3x in either direction AND >=0.3 s absolute (the same
-materiality floor the tripwire applies; without it every 0.3s->0.45s
-jitter key would demand a re-time, ~70 keys per refresh in practice
-vs ~20 material ones) — must be re-timed here (isolated min-of-3) and
-spliced in via ``--patch-baseline``, which also records the key under
-the baseline's top-level ``"isolated_keys"`` list. Isolated times are
-systematically faster than contended suite-run times, so the tripwire
-applies a protocol-aware suspect threshold (1.8x instead of 1.5x) to
-tagged keys — a single lucky suite run can no longer freeze an
-unbeatable floor (the r8 ``q_multimodal_features`` 1.43 s trap), and a
-single unlucky one can no longer hide slack.
+"""Re-time bench keys in a fresh process: one side of the tripwire's A/B.
 
 Usage:
-  python tools/retime.py q_key1 q_key2 ...    # re-time; print ONE JSON
-        line (last stdout line): {"master": .., "cpus": .., "queries": {..}}
-  python tools/retime.py --probe              # start the bench session,
-        report master/cpus only (isolation regression test hook)
-  python tools/retime.py --patch q_key1 ...   # also splice re-timed
-        values into bench_queries.json (never the baseline)
-  python tools/retime.py --patch-baseline q_key1 ...  # splice re-timed
-        values into tools/bench_baseline.json and tag them isolated
+  python tools/retime.py [--root DIR] q_key1 q_key2 ...
+  python tools/retime.py --probe    # start the bench session, time nothing
 
-Timing protocol matches bench.py: noop sink, gc.collect() before each
-pass, min over passes (steady state is what a long-lived cluster
-session sees).
+``--root`` is the checkout whose ``__spark_entry__`` and engine are
+imported (default: this one), so one script times the working tree and
+a ``git archive`` of an older commit alike. Each key runs once untimed
+(its codegen, JIT and Python-worker warm-up), then once timed under its
+own job group, into the noop sink after a ``gc.collect()``. The last
+stdout line is one JSON object: ``master``, ``root``, ``steal_pct``,
+``queries`` (key -> seconds), ``counts`` (key -> [jobs, stages] of the
+timed run) and ``failed`` (key -> error).
+
+Run it as a subprocess, never inside a process that owns a
+SparkSession: ``getOrCreate()`` cannot change master, so the keys would
+run on the caller's session; ``master`` in the JSON lets callers check.
 """
 
 from __future__ import annotations
 
+import argparse
 import gc
 import json
 import os
 import sys
 import time
+import traceback
 
-import pandas as pd  # noqa: F401 — pandas_udf type hints resolve at import
-
-HERE = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(HERE)
-
-
-def _ensure_importable() -> None:
-    """Make the repo importable when run as ``python tools/retime.py``
-    (sys.path[0] is tools/). Called from main() only — importing this
-    module must never mutate the caller's sys.path (round-10 advisor
-    item: a top-level insert leaks into any process that imports us)."""
-    try:
-        import self_healing_data_pipeline_spark  # noqa: F401
-    except ImportError:  # pragma: no cover - depends on caller's sys.path
-        sys.path.insert(0, REPO)
-
-
-def _bench_session():
-    """The bench-protocol session: local[$SPARK_GRAFT_CPUS], 32-part
-    shuffles. Correct ONLY in a fresh process (see isolation contract)."""
-    from self_healing_data_pipeline_spark.session import get_spark
-
-    return get_spark("retime")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cpu_ticks() -> tuple[int, int] | None:
     """(steal_ticks, total_ticks) from /proc/stat's aggregate cpu line,
     or None where unavailable (non-Linux). Steal is time the hypervisor
-    ran SOMEONE ELSE while this VM's vCPUs wanted to run — the one
-    environment signal that is externally imposed, unfakeable by our
-    own code, and invisible to `ps` inside the guest."""
+    ran someone else while this VM's vCPUs wanted to run."""
     try:
         with open("/proc/stat") as f:
             parts = f.readline().split()
@@ -102,11 +49,7 @@ def _cpu_ticks() -> tuple[int, int] | None:
 def steal_window():
     """Context-free steal meter: call once to start, call the returned
     closure to get the steal percentage (0-100) of all CPU time elapsed
-    since the start. Used to stamp each retime window so the tripwire
-    can tell 'this key is slower' from 'the hypervisor gave this VM
-    less CPU during the measurement' (co-tenant load that sentinel
-    calibration misses when the sentinels are short JVM bursts and the
-    suspect is sustained all-core work)."""
+    since the start (None where unavailable)."""
     t0 = _cpu_ticks()
 
     def pct() -> float | None:
@@ -121,103 +64,83 @@ def steal_window():
     return pct
 
 
-def retime(keys: list[str], passes: int = 3, spark=None) -> dict[str, float]:
-    """Return {key: min-of-passes seconds} for each bench key, isolated.
+def run_counted(spark, action, group: str) -> tuple[int, int]:
+    """Call ``action()`` under the job group ``group`` (a fresh name per
+    call: groups accumulate); return the numbers of jobs and distinct
+    stages that ran, construction-time jobs (eager localCheckpoint,
+    index training) included."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    stages: set[int] = set()
+    for jid in job_ids:
+        info = tracker.getJobInfo(jid)
+        if info is not None:
+            stages.update(info.stageIds)
+    return len(job_ids), len(stages)
 
-    PASS INTERLEAVING (round-11 tripwire hardening): passes are taken
-    round-robin ACROSS keys (pass 1 of every key, then pass 2, ...), not
-    key-by-key. The tripwire sends sentinels in the same invocation as
-    the suspects; interleaving means each sentinel's three timings are
-    temporally spread over the SAME wall-clock window as the suspects'
-    timings, so the sentinel-drift calibration measures the load that
-    was actually present while the suspects were measured — a co-tenant
-    burst that hits only the suspect's slice of a sequential schedule
-    can no longer inflate the suspect while leaving the sentinels clean
-    (the round-10 judge's contended-run false red).
-    """
+
+def retime(spark, keys: list[str]) -> dict:
+    """Warm and time each key; return the ``queries``, ``counts`` and
+    ``failed`` maps of the output line."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
 
-    if spark is None:
-        spark = _bench_session()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(1000).select(_warm(F.col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
     queries = entrymod.queries()
-    warm_q = queries.get("q_agg_groupby")
-    if warm_q is not None:
-        for _ in range(2):
-            warm_q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    out: dict[str, dict] = {"queries": {}, "counts": {}, "failed": {}}
+    for key in keys:
+        elapsed: list[float] = []
 
-    best: dict[str, float] = {k: float("inf") for k in keys}
-    for _ in range(passes):
-        for key in keys:
-            fn = queries[key]
-            gc.collect()
+        def run() -> None:
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best[key] = min(best[key], time.perf_counter() - t0)
-    return {k: round(v, 4) for k, v in best.items()}
+            elapsed.append(time.perf_counter() - t0)
 
-
-def _splice(path: str, timed: dict[str, float], tag_isolated: bool) -> None:
-    with open(path) as f:
-        data = json.load(f)
-    target = data["parsed"] if isinstance(data.get("parsed"), dict) else data
-    target["queries"].update(timed)
-    target["value"] = round(sum(target["queries"].values()), 4)
-    if tag_isolated:
-        tagged = set(target.get("isolated_keys", []))
-        tagged.update(timed)
-        target["isolated_keys"] = sorted(tagged)
-    with open(path, "w") as f:
-        json.dump(data, f, indent=1)
+        try:
+            fn = queries[key]  # a KeyError reports an unregistered key
+            for tag in ("warm", "timed"):
+                gc.collect()
+                counts = run_counted(spark, run, f"retime-{tag}-{key}")
+        except Exception as exc:  # reported, so the caller can judge it
+            traceback.print_exc()
+            out["failed"][key] = f"{type(exc).__name__}: {exc}"[:500]
+            continue
+        out["queries"][key] = round(elapsed[-1], 4)
+        out["counts"][key] = list(counts)
+    return out
 
 
 def main() -> int:
-    _ensure_importable()
-    args = sys.argv[1:]
-    patch = "--patch" in args
-    patch_baseline = "--patch-baseline" in args
-    probe = "--probe" in args
-    keys = [a for a in args if not a.startswith("--")]
-    if not keys and not probe:
-        print(__doc__)
-        return 2
-    spark = _bench_session()
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("--root", default=REPO, type=os.path.abspath)
+    ap.add_argument("--probe", action="store_true")
+    ap.add_argument("keys", nargs="*")
+    args = ap.parse_args()
+    if not args.keys and not args.probe:
+        ap.error("name the keys to time, or --probe")
+    # Never at import: importing this module must not change sys.path.
+    sys.path.insert(0, args.root)
+    import self_healing_data_pipeline_spark as pkg
+    from self_healing_data_pipeline_spark.session import get_spark
+
+    spark = get_spark("retime")  # local[$SPARK_GRAFT_CPUS], as bench.py
     steal = steal_window()
-    timed = retime(keys, spark=spark) if keys else {}
-    steal_pct = steal()
-    if patch:
-        _splice(os.path.join(REPO, "bench_queries.json"), timed, tag_isolated=True)
-    if patch_baseline:
-        _splice(
-            os.path.join(REPO, "tools", "bench_baseline.json"),
-            timed,
-            tag_isolated=True,
-        )
-    # ONE machine-readable line, guaranteed last on stdout: callers
-    # (the tripwire subprocess) parse this and assert the master.
+    timed = retime(spark, args.keys) if args.keys else {}
+    # ONE machine-readable line, guaranteed last on stdout.
     print(
         json.dumps(
             {
                 "master": spark.sparkContext.master,
-                "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-                # A/B env-injected session configs (session.py
-                # SPARK_GRAFT_CONF): stamped so a contaminated
-                # measurement window is detectable after the fact
-                # (round-12 advisor item). Empty string when unset.
-                "graft_conf": os.environ.get("SPARK_GRAFT_CONF", ""),
-                "queries": timed,
-                "steal_pct": steal_pct,
+                "root": os.path.dirname(os.path.dirname(pkg.__file__)),
+                "steal_pct": steal(),
+                **timed,
             }
         )
     )
